@@ -51,7 +51,7 @@ def main():
             ["sbt", "-batch", f"runMain graft.Verify {SF1} {OUT}"], env=env)
         run("Spark leg: 17 v_* at sf1slice",
             ["sbt", "-batch",
-             "runMain graft.VerifyOne " + " ".join([SLICE, OUTS] + SLICED)],
+             "runMain graft.Verify " + " ".join([SLICE, OUTS] + SLICED)],
             env=env)
     # the green claim below is arithmetic, not vibes: the full dump must
     # carry every registered oracle, the slice dump exactly the 17, and

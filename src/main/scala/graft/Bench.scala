@@ -141,35 +141,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalesce floor: Spark's 1 MB default (r22). The r21 64k floor
-      // (aimed at CPU-dense stages coalesced to few tasks) was adjudicated
-      // on the official methodology — interleaved same-window A/B, cold
-      // JVM, local[32], sf0.1, single-shot (plans/r22/aqe_floor_ab/):
-      // 1m totals 91.7/94.8 s vs 64k 98.3/98.1 s. The 64k floor LOSES
-      // ~4-7% overall (it helps only d_simhash_pairs' verify stage, and
-      // costs a little scheduling overhead on ~30 other queries), so the
-      // default reverts to Spark's. Env knob kept for deployments whose
-      // stages are genuinely CPU-dense per byte.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: the driver tail-parses stdout for the JSON line
-    // below, and WARN spam (WindowExec single-partition notes, function
-    // re-registration) both bloats the captured tail and risks interleaving
-    // with the metric line.
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.TopKRewrite.enable(spark)
-    // Opt the streaming benches onto the RocksDB state store (the 100 TB
-    // state backend — see StateBackend). Default stays the heap-backed
-    // provider: at sf0.1 the join state fits comfortably on heap and the
-    // in-memory provider is the faster of the two there.
-    if (sys.env.get("SPARK_GRAFT_STATE_BACKEND").contains("rocksdb"))
-      graft.streaming.StateBackend.useRocksDB(spark)
+    // AQE coalesce floor: Spark's own 1 MB default (r22). The r21 64k floor
+    // lost ~4-7% overall in an interleaved same-window A/B
+    // (plans/r22/aqe_floor_ab/), so the session leaves it unset.
+    // Log level ERROR, not WARN: the driver tail-parses stdout for the JSON
+    // line below, and WARN spam (WindowExec single-partition notes,
+    // function re-registration) both bloats the captured tail and risks
+    // interleaving with the metric line.
+    val spark = GraftSession()
     // Warm the JVM/codegen/scan paths so per-query timings are not skewed
     // by one-time session setup landing on whichever query runs first
     // (d_dedup_cluster sorts first and was absorbing the documents-table
@@ -188,38 +167,19 @@ object Bench {
     // non-fatal notes (e.g. a stream metric that succeeded on retry):
     // recorded in bench_full.json but NOT counted in "failed"
     val warnings = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Warm mode (r21, VERDICT r20 #7 — opt-in, default OFF so the official
-    // single-shot methodology is unchanged): SPARK_GRAFT_BENCH_WARM=1 runs
-    // every query a second time and reports the warm pass alongside the
-    // cold one (`value_warm` / `queries_warm`). Single-shot totals are
-    // dominated by cold-scan + codegen-compile noise (house-measured 7.7x
-    // cold/steady on t_bpe_pairs), so the warm map is the plan-quality
-    // signal; the cold map keeps round-to-round continuity.
-    val warmMode = sys.env.get("SPARK_GRAFT_BENCH_WARM").exists(v =>
-      v == "1" || v.equalsIgnoreCase("true"))
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
                  recordErr: Boolean): (Boolean, Double) = {
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true } catch {
         case e: Throwable =>
-          // full JSON-string escape: backslash and quote escaped, ALL
-          // control chars (tabs, newlines from plan fragments) flattened —
-          // a lone backslash or raw tab would make bench_full.json invalid
-          // exactly when there are failures to report
-          val msg = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-            .take(80).flatMap {
-              case '\\' => "\\\\"
-              case '"'  => "\\\""
-              case c if c < ' ' => " "
-              case c => c.toString
-            }
+          // raw text: escaped once, when bench_full.json is written
+          val msg = Option(e.getMessage).getOrElse(e.getClass.getSimpleName).take(80)
           if (recordErr) errors += s"$name: $msg"
           false
       }
       (ok, (System.nanoTime() - t0) / 1e9)
     }
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    val results = ordered.map { case (name, fn) =>
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val (ok, secs) = timeOnce(name, fn, recordErr = true)
       // Failed queries get a NEGATED timing so they are unmistakable in both
       // bench_full.json and the metric line (a -1.23 can never be confused
@@ -228,15 +188,6 @@ object Bench {
       // round to a passing-looking "0".
       name -> (if (ok) secs else -math.max(secs, 0.01))
     }.toMap
-    // warm pass AFTER the full cold loop (not per-query back-to-back), so
-    // a query's warm run cannot ride its own cold run's page cache beyond
-    // what every other query also left behind
-    val resultsWarm: Map[String, Double] =
-      if (!warmMode) Map.empty
-      else ordered.map { case (name, fn) =>
-        val (ok, secs) = timeOnce(name, fn, recordErr = false)
-        name -> (if (ok) secs else -math.max(secs, 0.01))
-      }.toMap
     // Streaming throughput, measured after the batch queries so the JVM and
     // scan paths are warm (the batch loop is the warmup). 0 rows/s = failed,
     // with the reason in the errors list. ONE retry per stream metric:
@@ -304,32 +255,17 @@ object Bench {
     val omitted = results.size - slowest.size
     // exception messages routinely carry quotes ('... "path" ...') and
     // backslashes — embed them escaped or the artifact stops parsing
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      case c => c.toString
-    } + "\""
-    val errJson = errors.take(10).map(jstr).mkString("[", ",", "]")
-    val warnJson = warnings.take(10).map(jstr).mkString("[", ",", "]")
-    // warm-mode extras: a scalar on the metric line (the line must stay
-    // well under the driver's ~2000-char tail capture), the full warm map
-    // only in bench_full.json; both ABSENT when warm mode is off so the
-    // official artifact is byte-shape-identical to previous rounds
-    val totalWarm = resultsWarm.values.map(math.abs).sum
-    val warmLine = if (warmMode) s""","value_warm":${fmt(totalWarm)}""" else ""
-    val warmFull = if (warmMode)
-      s""","total_warm":${fmt(totalWarm)},"queries_warm":${render(resultsWarm.toSeq.sortBy(_._1))}"""
-    else ""
+    val errJson = errors.take(10).map(Json.quote).mkString("[", ",", "]")
+    val warnJson = warnings.take(10).map(Json.quote).mkString("[", ",", "]")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/bench_full.json"),
-      s"""{"total":${fmt(total)},"failed":${errors.size},"stream_rows_per_sec":$streamRps,"stream_join_rows_per_sec":$streamJoinRps,"errors":$errJson,"warnings":$warnJson$warmFull,"steady":${render(steady.toSeq.sortBy(_._1))},"queries":${render(results.toSeq.sortBy(_._1))}}""")
+      s"""{"total":${fmt(total)},"failed":${errors.size},"stream_rows_per_sec":$streamRps,"stream_join_rows_per_sec":$streamJoinRps,"errors":$errJson,"warnings":$warnJson,"steady":${render(steady.toSeq.sortBy(_._1))},"queries":${render(results.toSeq.sortBy(_._1))}}""")
     catch { case _: Throwable => () }
     // Stop Spark BEFORE printing so no executor/shutdown logging can land
     // after the metric line — it must be the final line of stdout for the
     // driver's parse.
     spark.stop()
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"failed":${errors.size},"stream_rows_per_sec":$streamRps,"stream_join_rows_per_sec":$streamJoinRps$warmLine,"queries":${render(slowest)},"omitted_fastest":$omitted,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"failed":${errors.size},"stream_rows_per_sec":$streamRps,"stream_join_rows_per_sec":$streamJoinRps,"queries":${render(slowest)},"omitted_fastest":$omitted,"sf":${Json.quote(sfDir)}}""")
     System.out.flush()
   }
 }

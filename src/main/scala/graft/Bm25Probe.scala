@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Off-gate instrument for the BM25 core (round 18): the derived sf1
@@ -9,7 +8,7 @@ import org.apache.spark.sql.functions.col
   * vacuously 0-row at sf1. This runs the SAME parameterized core
   * ([[graft.operators.Round17Queries.bm25TopK]]) with caller-supplied
   * terms that DO exist in the derived corpus, dumps parquet in the
-  * VerifyOne layout, AND writes `oracle_sql.json` with the SAME term
+  * `Verify` layout, AND writes `oracle_sql.json` with the SAME term
   * list substituted into the registered t_bm25_topk oracle SQL
   * ([[graft.operators.Round17Queries.bm25OracleSql]]) — so one
   * `tools/oracle_check.py <sfDir> <outDir>` call completes the check
@@ -20,27 +19,14 @@ object Bm25Probe {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: Bm25Probe <sfDir> <outDir> <term> [term ...]")
     val terms = args.drop(2).toSeq
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val docs = Tables.documents(spark, args(0)).select(col("doc_id"), col("text"))
     graft.operators.Round17Queries.bm25TopK(docs, terms)
       .write.mode("overwrite").parquet(args(1) + "/t_bm25_topk")
     val sql = graft.operators.Round17Queries.bm25OracleSql(terms)
-    // full JSON string escape (VerifyOne's discipline): backslash, quote,
-    // and ALL control chars — a term carrying a tab/CR must not produce
-    // invalid oracle_sql.json
-    val esc = sql.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case '\n'         => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    }
     java.nio.file.Files.write(
       java.nio.file.Paths.get(args(1), "oracle_sql.json"),
-      s"""{"t_bm25_topk": "$esc"}""".getBytes("UTF-8"))
+      s"""{"t_bm25_topk": ${Json.quote(sql)}}""".getBytes("UTF-8"))
     spark.stop()
   }
 }

@@ -1,24 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (r21): one-line plan-shape summary for EVERY registered query —
   * join strategies, exchange count, cartesians — so a suite-wide audit is
   * one run instead of 202 PlanProbe invocations.
-  * Usage: runMain graft.PlanAudit [sfDir]
+  * Usage: runMain graft.PlanAudit [sfDir]   (SPARK_GRAFT_CPUS=8 for the
+  * committed plans/plan_audit_sf0.1.txt)
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // AQE off: AdaptiveSparkPlanExec hides its tree from collect() and
-      // sparkPlan predates EnsureRequirements (no exchanges yet), so the
-      // wide-exchange audit needs the plain executed plan. Counts differ
-      // from bench plans only by AQE's runtime rewrites.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.TopKRewrite.enable(spark)
+    val spark = GraftSession()
+    // AQE off: AdaptiveSparkPlanExec hides its tree from collect() and
+    // sparkPlan predates EnsureRequirements (no exchanges yet), so the
+    // wide-exchange audit needs the plain executed plan. Counts differ
+    // from bench plans only by AQE's runtime rewrites.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {

@@ -9,11 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
     // pre-cut builder subplans (r21): iterative operators Lineage.cut their

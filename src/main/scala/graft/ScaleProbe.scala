@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (VERDICT r19 #4): drive named registered queries at an
   * off-gate scale factor — the sf10-class 500k-doc corpus from
   * `dev/make_sf10.py` — timing each and printing every OBSERVED metric
@@ -19,13 +17,7 @@ object ScaleProbe {
     val d = args.headOption.getOrElse("target/sf10")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else Seq("d_minhash_lsh", "d_simhash_pairs", "d_corpus_build")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.TopKRewrite.enable(spark)
+    val spark = GraftSession()
     val nDocs = Tables.documents(spark, d).count()
     println(f"scaleprobe corpus: $nDocs%,d docs in $d")
     names.foreach { name =>

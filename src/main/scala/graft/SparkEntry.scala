@@ -4,11 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + BASELINE.md.
+/** Driver contract — see SURVEY.md §7 + BASELINE.md.
   *
-  * `queries` is the full operator inventory (SURVEY.md §2), one named entry
-  * per operator; `oracleSql` carries the DuckDB-equivalent ANSI SQL for every
-  * SQL-expressible one (same column names, deterministic ORDER BY).
+  * `registry` declares every query once, its builder next to its DuckDB
+  * SQL twin; `queries` and `oracleSql` are the two name-keyed views the
+  * driver and the benches read.
   */
 object SparkEntry {
 
@@ -31,23 +31,29 @@ object SparkEntry {
           .as("wire"))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    EventQueries.defs ++ RelationalQueries.defs ++ DedupQueries.defs ++
-      SimilarityQueries.defs ++ TextQueries.defs ++ MultimodalQueries.defs ++
-      ExtendedQueries.defs ++ DeepRelational.defs ++ Round3Queries.defs ++
-      Round4Queries.defs ++ Round7Queries.defs ++ Round9Queries.defs ++
-      Round11Queries.defs ++ Round12Queries.defs ++ Round13Queries.defs ++
-      Round14Queries.defs ++ Round15Queries.defs ++ Round17Queries.defs ++
-      AnalyticsQueries.defs ++ GraphQueries.defs ++ WarehouseQueries.defs
+  /** The query inventory (SURVEY.md §2): every operator object's queries,
+    * one [[QueryDef]] per name. A name registered twice fails here, when
+    * the registry loads, instead of one object silently shadowing another.
+    */
+  val registry: Seq[QueryDef] = unique(
+    EventQueries.queries ++ RelationalQueries.queries ++ DedupQueries.queries ++
+      SimilarityQueries.queries ++ TextQueries.queries ++ MultimodalQueries.queries ++
+      ExtendedQueries.queries ++ DeepRelational.queries ++ Round3Queries.queries ++
+      Round4Queries.queries ++ Round7Queries.queries ++ Round9Queries.queries ++
+      Round11Queries.queries ++ Round12Queries.queries ++ Round13Queries.queries ++
+      Round14Queries.queries ++ Round15Queries.queries ++ Round17Queries.queries ++
+      AnalyticsQueries.queries ++ GraphQueries.queries ++ WarehouseQueries.queries)
 
-  /** DuckDB-runnable ANSI SQL twin for each SQL-expressible query. */
-  def oracleSql: Map[String, String] =
-    EventQueries.oracles ++ RelationalQueries.oracles ++ DedupQueries.oracles ++
-      SimilarityQueries.oracles ++ TextQueries.oracles ++ MultimodalQueries.oracles ++
-      ExtendedQueries.oracles ++ DeepRelational.oracles ++ Round3Queries.oracles ++
-      Round4Queries.oracles ++ Round7Queries.oracles ++ Round9Queries.oracles ++
-      Round11Queries.oracles ++ Round12Queries.oracles ++ Round13Queries.oracles ++
-      Round14Queries.oracles ++ Round15Queries.oracles ++ Round17Queries.oracles ++
-      AnalyticsQueries.oracles ++ GraphQueries.oracles ++ WarehouseQueries.oracles
+  private[graft] def unique(qs: Seq[QueryDef]): Seq[QueryDef] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"query names registered twice: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
+  }
+
+  /** Builder per registered query name. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
+
+  /** DuckDB-runnable ANSI SQL twin per registered query name. */
+  val oracleSql: Map[String, String] = registry.map(q => q.name -> q.oracleSql).toMap
 }

@@ -25,11 +25,7 @@ object StreamProbe {
     val which = if (args.length > 1) args(1) else "join"
     val runs = if (args.length > 2) args(2).toInt else 3
     val backend = if (args.length > 3) args(3) else "default"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     if (backend == "rocksdb") graft.streaming.StateBackend.useRocksDB(spark)
     if (which == "state") {
       stateGrowth(spark, nBatches = runs, backend = backend,
@@ -199,7 +195,7 @@ object StreamProbe {
       .as[Long].head()
     println(s"corpuseq max LSH bucket: $maxBucket " +
       s"(cap ${graft.operators.DedupQueries.MegaBucketCap}; replay valid iff <= cap)")
-    val pairSet = graft.operators.DedupQueries.defs("d_minhash_lsh")(spark, d)
+    val pairSet = graft.operators.DedupQueries.minhashLshPairs(spark, d)
       .select(col("doc_a"), col("doc_b")).as[(Long, Long)].collect()
     println(s"corpuseq batch pair set: ${pairSet.length} verified pairs")
     val partnersLower: Map[Long, Array[Long]] =

@@ -25,7 +25,6 @@ object ParityMath {
     val p = math.pow(10.0, digits)
     floor(c * p + 0.5) / p
   }
-  def floorRound4(c: Column): Column = floorRound(c, 4)
 
   /** The DuckDB-side spelling, for building oracle SQL. */
   def floorRoundSql(exprSql: String, digits: Int): String = {

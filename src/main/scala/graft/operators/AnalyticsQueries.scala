@@ -189,13 +189,29 @@ object AnalyticsQueries {
       .orderBy("src", "dst")
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[QueryDef] = Seq(
     // R11/R14-adjacent — event funnel: strictly-ordered first-touch
     // progression view → click → purchase. ONE shuffle (user_id) with
     // map-side partial min; the final 3-row stack is a scalar aggregate.
     // At 100 TB the shuffle carries one row per (partition × user) — the
     // same shape as q_distinct_users.
-    "r_funnel" -> ((s, d) => funnel(Tables.events(s, d))),
+    QueryDef("r_funnel", (s, d) => funnel(Tables.events(s, d)),
+      """WITH u AS (
+           SELECT user_id,
+                  min(CASE WHEN event_type = 'view' THEN epoch_ms(ts) END) AS tv,
+                  min(CASE WHEN event_type = 'click' THEN epoch_ms(ts) END) AS tc,
+                  min(CASE WHEN event_type = 'purchase' THEN epoch_ms(ts) END) AS tp
+           FROM events GROUP BY user_id)
+         SELECT stage, n_users FROM (
+           SELECT 'f1_view' AS stage,
+                  CAST(count(tv) AS BIGINT) AS n_users FROM u
+           UNION ALL
+           SELECT 'f2_view_click',
+                  CAST(count(CASE WHEN tc > tv THEN 1 END) AS BIGINT) FROM u
+           UNION ALL
+           SELECT 'f3_view_click_purchase',
+                  CAST(count(CASE WHEN tc > tv AND tp > tc THEN 1 END) AS BIGINT) FROM u)
+         ORDER BY stage"""),
 
     // R12/R13-adjacent — cohort retention heatmap input. Two keyed
     // shuffles (user_id for first-day + the join, which AQE plans off the
@@ -203,7 +219,16 @@ object AnalyticsQueries {
     // distinct() collapses (user, cohort, offset) BEFORE the count so the
     // final agg shuffle carries at most |users| × 8 rows, and the
     // first-day frame is per-user (≪ events) so its join side stays small.
-    "r_cohort_retention" -> ((s, d) => cohortRetention(Tables.events(s, d))),
+    QueryDef("r_cohort_retention", (s, d) => cohortRetention(Tables.events(s, d)),
+      """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
+           f AS (SELECT user_id, min(day) AS cohort_day FROM e GROUP BY user_id),
+           a AS (SELECT DISTINCT e.user_id, f.cohort_day,
+                        CAST(date_diff('day', f.cohort_day, e.day) AS INT) AS offset_day
+                 FROM e JOIN f USING (user_id)
+                 WHERE date_diff('day', f.cohort_day, e.day) BETWEEN 0 AND 7)
+         SELECT cohort_day, offset_day, CAST(count(*) AS BIGINT) AS n_active
+         FROM a GROUP BY cohort_day, offset_day
+         ORDER BY cohort_day, offset_day"""),
 
     // R19-adjacent — per-dimension embedding moments (count/min/max/mean/
     // stddev). posexplode multiplies rows ×64 but the hash aggregate is
@@ -211,7 +236,15 @@ object AnalyticsQueries {
     // constant in corpus size. min/max are float-exact in both engines
     // (no accumulation); mean/stddev accumulate in double and round to 4
     // decimals (the established float-parity dial).
-    "v_dim_stats" -> ((s, d) => dimStats(Tables.embeddings(s, d))),
+    QueryDef("v_dim_stats", (s, d) => dimStats(Tables.embeddings(s, d)),
+      s"""SELECT t.i AS dim, CAST(count(*) AS BIGINT) AS n,
+                 CAST(min(e.embedding[t.i + 1]) AS DOUBLE) AS x_min,
+                 CAST(max(e.embedding[t.i + 1]) AS DOUBLE) AS x_max,
+                 ${floorRoundSql("avg(e.embedding[t.i + 1])", 4)} AS x_mean,
+                 ${floorRoundSql("stddev_samp(e.embedding[t.i + 1])", 4)} AS x_std
+          FROM embeddings e, range(0, 64) t(i)
+          WHERE len(e.embedding) = 64
+          GROUP BY t.i ORDER BY dim"""),
 
     // R20 — Zipf-law fit over the corpus word-frequency table:
     // rank words by frequency (ties broken by word — total order, so the
@@ -222,7 +255,7 @@ object AnalyticsQueries {
     // after the one token-keyed shuffle that builds the table map-side-
     // partially). regr_slope/intercept/r2 accumulate in double → 4-decimal
     // dial.
-    "t_zipf_slope" -> ((s, d) => {
+    QueryDef("t_zipf_slope", (s, d) => {
       val vocab = Tables.documents(s, d)
         .select(explode(split(lower(col("text")), " ")).as("w"))
         .filter(length(col("w")) > 0)
@@ -246,7 +279,20 @@ object AnalyticsQueries {
           floorRound(expr("regr_slope(lf, lr)"), 4).as("zipf_slope"),
           floorRound(expr("regr_intercept(lf, lr)"), 4).as("zipf_intercept"),
           floorRound(expr("regr_r2(lf, lr)"), 4).as("zipf_r2"))
-    }),
+    },
+      s"""WITH v AS (
+            SELECT w, count(*) AS f FROM (
+              SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents)
+            WHERE len(w) > 0 GROUP BY w),
+          r AS (
+            SELECT ln(CAST(f AS DOUBLE)) AS lf,
+                   ln(CAST(row_number() OVER (ORDER BY f DESC, w) AS DOUBLE)) AS lr
+            FROM v)
+          SELECT CAST(count(*) AS BIGINT) AS n_types,
+                 ${floorRoundSql("regr_slope(lf, lr)", 4)} AS zipf_slope,
+                 ${floorRoundSql("regr_intercept(lf, lr)", 4)} AS zipf_intercept,
+                 ${floorRoundSql("regr_r2(lf, lr)", 4)} AS zipf_r2
+          FROM r"""),
 
     // R7/R12-adjacent — z-score anomaly summary per event type: the
     // monitoring pass over the stream's batch twin. Two-phase: per-type
@@ -254,7 +300,7 @@ object AnalyticsQueries {
     // ~5-row stats frame back onto the events, flag |z| > 3. Mean/std go
     // through the 4-dp parity dial BEFORE z so both engines threshold the
     // same deterministic arithmetic; max|z| re-rounds for display.
-    "r_zscore_outliers" -> ((s, d) => {
+    QueryDef("r_zscore_outliers", (s, d) => {
       val e = Tables.events(s, d)
       val stats = e.groupBy(col("event_type")).agg(
         floorRound(avg(col("value")), 4).as("mu"),
@@ -267,7 +313,20 @@ object AnalyticsQueries {
           count(when(abs(col("z")) > 3.0, lit(1))).cast("long").as("n_outliers"),
           floorRound(max(abs(col("z"))), 4).as("max_abs_z"))
         .orderBy("event_type")
-    }),
+    },
+      s"""WITH st AS (
+            SELECT event_type,
+                   ${floorRoundSql("avg(value)", 4)} AS mu,
+                   ${floorRoundSql("stddev_samp(value)", 4)} AS sigma
+            FROM events GROUP BY event_type),
+          z AS (
+            SELECT e.event_type, (e.value - st.mu) / st.sigma AS z
+            FROM events e JOIN st USING (event_type))
+          SELECT event_type,
+                 CAST(count(*) AS BIGINT) AS n_events,
+                 CAST(count(CASE WHEN abs(z) > 3.0 THEN 1 END) AS BIGINT) AS n_outliers,
+                 ${floorRoundSql("max(abs(z))", 4)} AS max_abs_z
+          FROM z GROUP BY event_type ORDER BY event_type"""),
 
     // R10/R12-adjacent — weighted sampling WITHOUT replacement
     // (Efraimidis-Spirakis A-ES): the source-weighted corpus sampling the
@@ -280,7 +339,7 @@ object AnalyticsQueries {
     // doubles); the only corpus-sized operator is the
     // TakeOrderedAndProject heap — per-partition top-20, single merge,
     // never a full sort. Ties broken by doc_id: a total order.
-    "q_weighted_sample" -> ((s, d) =>
+    QueryDef("q_weighted_sample", (s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars"),
           ((col("doc_id") * lit(1103515245L) + lit(12345L)) % lit(2147483647L))
@@ -293,7 +352,18 @@ object AnalyticsQueries {
         // the emitted key IS the ranking key (10-dp): re-rounding it
         // coarser would collapse ties and make the emitted row order
         // unreproducible from the emitted columns
-        .select(col("doc_id"), col("n_chars"), col("es_key"))),
+        .select(col("doc_id"), col("n_chars"), col("es_key")),
+      s"""WITH k AS (
+            SELECT doc_id, n_chars,
+                   (CAST((doc_id * 1103515245 + 12345) % 2147483647 AS DOUBLE) + 0.5)
+                     / 2147483647.0 AS u
+            FROM documents),
+          r AS (
+            SELECT doc_id, n_chars,
+                   ${floorRoundSql("ln(u) / CAST(n_chars AS DOUBLE)", 10)} AS es_key
+            FROM k)
+          SELECT doc_id, n_chars, es_key
+          FROM r ORDER BY es_key DESC, doc_id LIMIT 20"""),
 
     // R13/R14-adjacent — bounded-window EWMA per user (α = 0.5 over the
     // last 8 events by time): the trend line a monitoring dashboard draws
@@ -302,7 +372,7 @@ object AnalyticsQueries {
     // both engines; short histories renormalize over the lags that
     // exist). ONE user-keyed window shuffle; at 100 TB the state per key
     // is 8 lags — the same shape Spark's streaming twin would hold.
-    "r_ewma" -> ((s, d) => {
+    QueryDef("r_ewma", (s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts_ms"), col("event_id"))
       val terms = (0 until 8).map { k =>
@@ -318,163 +388,7 @@ object AnalyticsQueries {
         .withColumn("ewma8", floorRound(vsum / wsum, 4))
         .select(col("user_id"), col("event_id"), col("ewma8"))
         .orderBy("user_id", "event_id")
-    }),
-
-    // R18 — PPJoin-style EXACT all-pairs Jaccard τ-join (see [[ppjoin]]):
-    // the deterministic sibling of d_minhash_lsh — same problem, zero
-    // probability of a missed pair. Candidates only from rarest-first
-    // PREFIX collisions + an integer length filter; exact verify on the
-    // survivors. Integer thresholds make completeness a theorem, so the
-    // oracle is the brute-force all-pairs SQL (result invariance).
-    "d_ppjoin" -> ((s, d) => {
-      graft.plans.GraftFunctions.register(s)
-      ppjoin(Tables.documents(s, d))
-    }),
-
-    // R7/R12-adjacent — RFM (recency/frequency/monetary) segmentation:
-    // the classic customer-value grid, built scale-right — NO global
-    // ntile window (a single-partition sort over all users is the
-    // 100 TB killer). Instead: per-user metrics in one user-keyed
-    // shuffle, exact quintile CUTPOINTS from one percentile aggregate
-    // (4 doubles per metric), broadcast back, per-row CASE assignment,
-    // then a segment-keyed count. Cutpoints go through the 4-dp dial so
-    // both engines threshold identical values; score convention: higher
-    // = better (recent / frequent / high-spend).
-    "r_rfm_segments" -> ((s, d) => rfmSegments(Tables.events(s, d))),
-
-    // R13-adjacent — event-type transition matrix (first-order Markov):
-    // the path-analysis pass behind "what do users do next". ONE
-    // user-keyed window (lead over event time) then a 25-cell-bounded
-    // count; transition probabilities join the src totals back (tiny
-    // broadcast). Deterministic order: (epoch-millis, event_id) is a
-    // total order per user in both engines.
-    "q_markov_transitions" -> ((s, d) => markovTransitions(Tables.events(s, d))),
-
-    // R20/R17-adjacent — n-gram novelty curve: per doc (in doc_id order,
-    // the corpus's ingest order), the fraction of its distinct 3-shingles
-    // whose FIRST corpus occurrence is this doc — the "how much new text
-    // does each increment add" metric a dataset-curation loop watches as
-    // it appends crawls (a falling curve means the source is mined out).
-    // Shape: one gram-hash-keyed min-aggregate (map-side partial) + one
-    // doc-keyed count — the span-dedup shuffle discipline (8-byte hashes,
-    // strings never move; 64-bit-collision trade documented there).
-    "t_ngram_novelty" -> ((s, d) => {
-      graft.plans.GraftFunctions.register(s)
-      import graft.functions.TextFunctions.shingles
-      val sh = Tables.documents(s, d)
-        .select(col("doc_id"), explode(array_distinct(shingles("text", 3))).as("g"))
-        .select(col("doc_id"), xxhash64(col("g")).as("h"))
-      val first = sh.groupBy(col("h")).agg(min(col("doc_id")).as("first_doc"))
-      sh.join(first, Seq("h"))
-        .groupBy(col("doc_id"))
-        .agg(
-          count(lit(1)).cast("long").as("n_grams"),
-          count(when(col("first_doc") === col("doc_id"), lit(1)))
-            .cast("long").as("n_novel"))
-        .withColumn("novelty_frac",
-          floorRound(col("n_novel").cast("double") / col("n_grams").cast("double"), 4))
-        .orderBy("doc_id")
-    }),
-
-    // R20 — lexicon (denylist) redaction: the scrubbing stage of a corpus
-    // pipeline (PII/sensitive-term removal; the synthetic corpus has no
-    // real PII, so the denylist is four in-vocabulary terms — the
-    // machinery, not the lexicon, is the deliverable). Token-exact
-    // replacement via higher-order functions (per-row, whole-stage
-    // codegen, zero shuffles); the redacted text is emitted as its md5 so
-    // the oracle proves byte-identical scrubbing without moving full text
-    // through the compare.
-    "t_redact_lexicon" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), split(col("text"), " ").as("t"))
-        .select(
-          col("doc_id"),
-          size(col("t")).as("n_tokens"),
-          expr(s"size(filter(t, w -> w IN ($denySqlList)))").as("n_hits"),
-          expr(
-            s"""md5(array_join(transform(t,
-                 w -> CASE WHEN w IN ($denySqlList) THEN '<RED>' ELSE w END),
-               ' '))""").as("redacted_md5"))
-        .orderBy("doc_id")))
-
-  val oracles: Map[String, String] = Map(
-    "r_funnel" ->
-      """WITH u AS (
-           SELECT user_id,
-                  min(CASE WHEN event_type = 'view' THEN epoch_ms(ts) END) AS tv,
-                  min(CASE WHEN event_type = 'click' THEN epoch_ms(ts) END) AS tc,
-                  min(CASE WHEN event_type = 'purchase' THEN epoch_ms(ts) END) AS tp
-           FROM events GROUP BY user_id)
-         SELECT stage, n_users FROM (
-           SELECT 'f1_view' AS stage,
-                  CAST(count(tv) AS BIGINT) AS n_users FROM u
-           UNION ALL
-           SELECT 'f2_view_click',
-                  CAST(count(CASE WHEN tc > tv THEN 1 END) AS BIGINT) FROM u
-           UNION ALL
-           SELECT 'f3_view_click_purchase',
-                  CAST(count(CASE WHEN tc > tv AND tp > tc THEN 1 END) AS BIGINT) FROM u)
-         ORDER BY stage""",
-    "r_cohort_retention" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
-           f AS (SELECT user_id, min(day) AS cohort_day FROM e GROUP BY user_id),
-           a AS (SELECT DISTINCT e.user_id, f.cohort_day,
-                        CAST(date_diff('day', f.cohort_day, e.day) AS INT) AS offset_day
-                 FROM e JOIN f USING (user_id)
-                 WHERE date_diff('day', f.cohort_day, e.day) BETWEEN 0 AND 7)
-         SELECT cohort_day, offset_day, CAST(count(*) AS BIGINT) AS n_active
-         FROM a GROUP BY cohort_day, offset_day
-         ORDER BY cohort_day, offset_day""",
-    "v_dim_stats" ->
-      s"""SELECT t.i AS dim, CAST(count(*) AS BIGINT) AS n,
-                 CAST(min(e.embedding[t.i + 1]) AS DOUBLE) AS x_min,
-                 CAST(max(e.embedding[t.i + 1]) AS DOUBLE) AS x_max,
-                 ${floorRoundSql("avg(e.embedding[t.i + 1])", 4)} AS x_mean,
-                 ${floorRoundSql("stddev_samp(e.embedding[t.i + 1])", 4)} AS x_std
-          FROM embeddings e, range(0, 64) t(i)
-          WHERE len(e.embedding) = 64
-          GROUP BY t.i ORDER BY dim""",
-    "t_zipf_slope" ->
-      s"""WITH v AS (
-            SELECT w, count(*) AS f FROM (
-              SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents)
-            WHERE len(w) > 0 GROUP BY w),
-          r AS (
-            SELECT ln(CAST(f AS DOUBLE)) AS lf,
-                   ln(CAST(row_number() OVER (ORDER BY f DESC, w) AS DOUBLE)) AS lr
-            FROM v)
-          SELECT CAST(count(*) AS BIGINT) AS n_types,
-                 ${floorRoundSql("regr_slope(lf, lr)", 4)} AS zipf_slope,
-                 ${floorRoundSql("regr_intercept(lf, lr)", 4)} AS zipf_intercept,
-                 ${floorRoundSql("regr_r2(lf, lr)", 4)} AS zipf_r2
-          FROM r""",
-    "r_zscore_outliers" ->
-      s"""WITH st AS (
-            SELECT event_type,
-                   ${floorRoundSql("avg(value)", 4)} AS mu,
-                   ${floorRoundSql("stddev_samp(value)", 4)} AS sigma
-            FROM events GROUP BY event_type),
-          z AS (
-            SELECT e.event_type, (e.value - st.mu) / st.sigma AS z
-            FROM events e JOIN st USING (event_type))
-          SELECT event_type,
-                 CAST(count(*) AS BIGINT) AS n_events,
-                 CAST(count(CASE WHEN abs(z) > 3.0 THEN 1 END) AS BIGINT) AS n_outliers,
-                 ${floorRoundSql("max(abs(z))", 4)} AS max_abs_z
-          FROM z GROUP BY event_type ORDER BY event_type""",
-    "q_weighted_sample" ->
-      s"""WITH k AS (
-            SELECT doc_id, n_chars,
-                   (CAST((doc_id * 1103515245 + 12345) % 2147483647 AS DOUBLE) + 0.5)
-                     / 2147483647.0 AS u
-            FROM documents),
-          r AS (
-            SELECT doc_id, n_chars,
-                   ${floorRoundSql("ln(u) / CAST(n_chars AS DOUBLE)", 10)} AS es_key
-            FROM k)
-          SELECT doc_id, n_chars, es_key
-          FROM r ORDER BY es_key DESC, doc_id LIMIT 20""",
-    "r_ewma" ->
+    },
       s"""WITH t AS (
             SELECT user_id, event_id, value, epoch_ms(ts) AS ts_ms FROM events),
           l AS (
@@ -493,8 +407,18 @@ object AnalyticsQueries {
                        .mkString(" + ")}) AS vsum
             FROM l)
           SELECT user_id, event_id, ${floorRoundSql("vsum / wsum", 4)} AS ewma8
-          FROM e ORDER BY user_id, event_id""",
-    "d_ppjoin" ->
+          FROM e ORDER BY user_id, event_id"""),
+
+    // R18 — PPJoin-style EXACT all-pairs Jaccard τ-join (see [[ppjoin]]):
+    // the deterministic sibling of d_minhash_lsh — same problem, zero
+    // probability of a missed pair. Candidates only from rarest-first
+    // PREFIX collisions + an integer length filter; exact verify on the
+    // survivors. Integer thresholds make completeness a theorem, so the
+    // oracle is the brute-force all-pairs SQL (result invariance).
+    QueryDef("d_ppjoin", (s, d) => {
+      graft.plans.GraftFunctions.register(s)
+      ppjoin(Tables.documents(s, d))
+    },
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
          sh AS (
            SELECT doc_id,
@@ -513,8 +437,18 @@ object AnalyticsQueries {
            JOIN sz sa ON sa.doc_id = da
            JOIN sz sb ON sb.doc_id = db
          WHERE 8 * i >= 3 * (sa.n + sb.n)
-         ORDER BY doc_a, doc_b""",
-    "r_rfm_segments" ->
+         ORDER BY doc_a, doc_b"""),
+
+    // R7/R12-adjacent — RFM (recency/frequency/monetary) segmentation:
+    // the classic customer-value grid, built scale-right — NO global
+    // ntile window (a single-partition sort over all users is the
+    // 100 TB killer). Instead: per-user metrics in one user-keyed
+    // shuffle, exact quintile CUTPOINTS from one percentile aggregate
+    // (4 doubles per metric), broadcast back, per-row CASE assignment,
+    // then a segment-keyed count. Cutpoints go through the 4-dp dial so
+    // both engines threshold identical values; score convention: higher
+    // = better (recent / frequent / high-spend).
+    QueryDef("r_rfm_segments", (s, d) => rfmSegments(Tables.events(s, d)),
       s"""WITH pu AS (
             SELECT user_id,
                    max(epoch_ms(ts)) AS last_ms,
@@ -553,8 +487,15 @@ object AnalyticsQueries {
                          ELSE 5 END) AS segment
             FROM m, c)
           SELECT segment, CAST(count(*) AS BIGINT) AS n_users
-          FROM seg GROUP BY segment ORDER BY segment""",
-    "q_markov_transitions" ->
+          FROM seg GROUP BY segment ORDER BY segment"""),
+
+    // R13-adjacent — event-type transition matrix (first-order Markov):
+    // the path-analysis pass behind "what do users do next". ONE
+    // user-keyed window (lead over event time) then a 25-cell-bounded
+    // count; transition probabilities join the src totals back (tiny
+    // broadcast). Deterministic order: (epoch-millis, event_id) is a
+    // total order per user in both engines.
+    QueryDef("q_markov_transitions", (s, d) => markovTransitions(Tables.events(s, d)),
       s"""WITH seq AS (
             SELECT user_id, event_type,
                    lead(event_type, 1) OVER (PARTITION BY user_id
@@ -567,8 +508,33 @@ object AnalyticsQueries {
           SELECT n.src, n.dst, n.n,
                  ${floorRoundSql("CAST(n.n AS DOUBLE) / CAST(tot.n_src AS DOUBLE)", 4)} AS p
           FROM n JOIN tot USING (src)
-          ORDER BY src, dst""",
-    "t_ngram_novelty" ->
+          ORDER BY src, dst"""),
+
+    // R20/R17-adjacent — n-gram novelty curve: per doc (in doc_id order,
+    // the corpus's ingest order), the fraction of its distinct 3-shingles
+    // whose FIRST corpus occurrence is this doc — the "how much new text
+    // does each increment add" metric a dataset-curation loop watches as
+    // it appends crawls (a falling curve means the source is mined out).
+    // Shape: one gram-hash-keyed min-aggregate (map-side partial) + one
+    // doc-keyed count — the span-dedup shuffle discipline (8-byte hashes,
+    // strings never move; 64-bit-collision trade documented there).
+    QueryDef("t_ngram_novelty", (s, d) => {
+      graft.plans.GraftFunctions.register(s)
+      import graft.functions.TextFunctions.shingles
+      val sh = Tables.documents(s, d)
+        .select(col("doc_id"), explode(array_distinct(shingles("text", 3))).as("g"))
+        .select(col("doc_id"), xxhash64(col("g")).as("h"))
+      val first = sh.groupBy(col("h")).agg(min(col("doc_id")).as("first_doc"))
+      sh.join(first, Seq("h"))
+        .groupBy(col("doc_id"))
+        .agg(
+          count(lit(1)).cast("long").as("n_grams"),
+          count(when(col("first_doc") === col("doc_id"), lit(1)))
+            .cast("long").as("n_novel"))
+        .withColumn("novelty_frac",
+          floorRound(col("n_novel").cast("double") / col("n_grams").cast("double"), 4))
+        .orderBy("doc_id")
+    },
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
          sh AS (
            SELECT doc_id,
@@ -583,8 +549,28 @@ object AnalyticsQueries {
                 floor(CAST(count(CASE WHEN first.first_doc = sh.doc_id THEN 1 END) AS DOUBLE)
                       / count(*) * 10000 + 0.5) / 10000 AS novelty_frac
          FROM sh JOIN first USING (g)
-         GROUP BY sh.doc_id ORDER BY sh.doc_id""",
-    "t_redact_lexicon" ->
+         GROUP BY sh.doc_id ORDER BY sh.doc_id"""),
+
+    // R20 — lexicon (denylist) redaction: the scrubbing stage of a corpus
+    // pipeline (PII/sensitive-term removal; the synthetic corpus has no
+    // real PII, so the denylist is four in-vocabulary terms — the
+    // machinery, not the lexicon, is the deliverable). Token-exact
+    // replacement via higher-order functions (per-row, whole-stage
+    // codegen, zero shuffles); the redacted text is emitted as its md5 so
+    // the oracle proves byte-identical scrubbing without moving full text
+    // through the compare.
+    QueryDef("t_redact_lexicon", (s, d) =>
+      Tables.documents(s, d)
+        .select(col("doc_id"), split(col("text"), " ").as("t"))
+        .select(
+          col("doc_id"),
+          size(col("t")).as("n_tokens"),
+          expr(s"size(filter(t, w -> w IN ($denySqlList)))").as("n_hits"),
+          expr(
+            s"""md5(array_join(transform(t,
+                 w -> CASE WHEN w IN ($denySqlList) THEN '<RED>' ELSE w END),
+               ' '))""").as("redacted_md5"))
+        .orderBy("doc_id"),
       s"""SELECT doc_id,
                  CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
                  CAST(len(list_filter(string_split(text, ' '),
@@ -593,4 +579,5 @@ object AnalyticsQueries {
                        w -> CASE WHEN list_contains([$denySqlList], w)
                                  THEN '<RED>' ELSE w END), ' ')) AS redacted_md5
           FROM documents ORDER BY doc_id""")
+  )
 }

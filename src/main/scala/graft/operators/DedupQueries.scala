@@ -177,29 +177,165 @@ object DedupQueries {
           .as("jaccard"))
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The two-level overflow-recovery stage of `d_simhash_pairs` (r14;
+    * WIDENED r20), factored for direct spec drive (Round14Spec plants
+    * hand-built signature rows — band bytes fully controlled). `ranked`
+    * carries (doc_id, sh, n, m, band, h, __sz).
+    *
+    * r20 scale fix — the banding adjustment the L1 cap comment always
+    * prescribed, now implemented and measured: the r14 recovery re-keyed
+    * overflow members by the single (band, h, NEXT-band byte) composite,
+    * which recovers a pair only when its flooded band's cyclic successor
+    * is also clean. The 500k-doc sf10 probe measured the cost of that
+    * narrowness: 591 of 25,600 true pairs lost (2.3%) with every L1
+    * bucket over cap (≈2,000 members vs 512 — 8-bit keys give only 256
+    * buckets/band, so occupancy scales linearly with corpus size).
+    * WIDENED scheme: every doc touching an overflowed L1 bucket emits its
+    * 28 C(8,2) WIDE-BAND keys — the (bandLo, bandHi, byteLo, byteHi)
+    * 16-bit composites — so a pair survives L1 overflow iff it has ANY
+    * TWO clean bands (vs: two cyclically-ADJACENT clean bands). Wide
+    * buckets have 65,536 keys per band pair: occupancy stays ≲ cap up to
+    * ~33M docs/shard, two decades past the L1 cliff; past that the L2 cap
+    * binds and the residual is again OBSERVED, not silent
+    * (`simhash_bucket_overflow_l2`). Pairs whose every agreeing band pair
+    * involves a flooded byte remain the honest residual. Cost is sized by
+    * the overflow mass only (zero rows on a healthy corpus); extra
+    * candidates can never add false pairs — the exact verify gates
+    * everything.
+    * Returns (doc_a, doc_b) candidates for the exact verify.
+    */
+  private[graft] def simhashOverflowCandidates(ranked: DataFrame,
+                                               cap: Int,
+                                               l2Cap0: Int = 0): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // Wide buckets are 256× finer than L1, so their cap can be higher at
+    // the same worst-case join cost; callers pass l2Cap (d_simhash_pairs
+    // uses 4×cap — measured at sf10 to claw back L2-cap losses) or leave
+    // 0 to inherit `cap` (the spec fixtures pin the residual semantics
+    // at the tight cap).
+    val l2Cap = if (l2Cap0 > 0) l2Cap0 else cap
+    // distinct docs involved in ANY overflowed L1 bucket — membership in
+    // one flooded bucket is what voids the L1 pigeonhole for this doc
+    val overDocs = ranked.filter(col("__sz") > cap)
+      .select(col("doc_id"), col("sh"), col("n"), col("m"))
+      .dropDuplicates("doc_id")
+    val wide = overDocs.select(col("doc_id"), col("sh"), col("n"), col("m"),
+      explode(expr(
+        """flatten(transform(sequence(0, 6), lo ->
+             transform(sequence(lo + 1, 7), hi ->
+               struct(lo AS blo, hi AS bhi,
+                 shiftrightunsigned(sh, lo * 8) & 255L AS hlo,
+                 shiftrightunsigned(sh, hi * 8) & 255L AS hhi))))""")).as("wk"))
+      .select(col("doc_id"), col("sh"), col("n"), col("m"),
+        col("wk.blo"), col("wk.bhi"), col("wk.hlo"), col("wk.hhi"))
+    val wB2 = Window.partitionBy(col("blo"), col("bhi"), col("hlo"), col("hhi"))
+      .orderBy(col("doc_id"))
+    val over2 = wide
+      .withColumn("__r2", row_number().over(wB2))
+      .observe("simhash_bucket_overflow_l2",
+        sum(when(col("__r2") > l2Cap, 1L).otherwise(0L)).as("members_cut"),
+        max(col("__r2")).as("max_bucket"))
+      .filter(col("__r2") <= l2Cap)
+      .drop("__r2")
+    val tauOver = simhashTau(col("a.n"), col("b.n"))
+    over2.as("a")
+      .join(over2.as("b"),
+        col("a.blo") === col("b.blo") && col("a.bhi") === col("b.bhi") &&
+          col("a.hlo") === col("b.hlo") && col("a.hhi") === col("b.hhi") &&
+          col("a.doc_id") < col("b.doc_id") &&
+          bit_count(col("a.sh").bitwiseXOR(col("b.sh"))) <= tauOver &&
+          lit(2) * least(col("a.m"), col("b.m")) >= greatest(col("a.m"), col("b.m")))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+  }
+
+  private val NearDupTruthSql =
+    """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+       sh AS (
+         SELECT doc_id,
+                unnest(list_distinct(list_transform(
+                  range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' ')))) AS s
+         FROM toks WHERE len(t) >= 3),
+       sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id),
+       inter AS (
+         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS i
+         FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+         GROUP BY 1, 2)
+       SELECT doc_a, doc_b,
+              floor((CAST(i AS DOUBLE) / (sa.n + sb.n - i)) * 10000 + 0.5) / 10000 AS jaccard
+       FROM inter
+         JOIN sz sa ON sa.doc_id = doc_a
+         JOIN sz sb ON sb.doc_id = doc_b
+       WHERE floor((CAST(i AS DOUBLE) / (sa.n + sb.n - i)) * 10000 + 0.5) / 10000 >= 0.5
+       ORDER BY doc_a, doc_b"""
+
+  /** d_minhash_lsh: the verified MinHash-LSH near-duplicate pair set;
+    * also the near-dup drop of the corpus-build capstones. */
+  def minhashLshPairs(s: SparkSession, d: String): DataFrame = {
+    graft.plans.GraftFunctions.register(s)
+    val base = docs(s, d)
+      .select(col("doc_id"), shingles("text", 3).as("sh"))
+      .filter(size(col("sh")) > 0)
+    // Candidate generation in ONE pass: shingle+sign the corpus once,
+    // shuffle slim (band, h, doc_id) rows, and emit intra-bucket pairs
+    // from each bucket's collected id list — no self-join, so the
+    // signature scan is never recomputed. Buckets are near-singleton for
+    // non-dups, so the per-bucket pair expansion stays tiny; a skewed
+    // bucket (boilerplate dups) is capped by the same m² it would cost in
+    // any LSH formulation.
+    val banded = base
+      .withColumn("sig", expr("graft_minhash(sh)")) // native: one hash pass + k multiply-adds
+      .select(col("doc_id"), explode(minhashBands("sig", 8, 4)).as("band"))
+      .select(col("doc_id"), col("band.band"), col("band.h"))
+    val cand = bucketedCandidatePairs(banded)
+    // Verification: shingle only the docs candidates touch, once each
+    // (verifyPairs), never the whole corpus a second time.
+    verifyPairs(s, d, cand).orderBy("doc_a", "doc_b")
+  }
+
+  val queries: Seq[QueryDef] = Seq(
     // R17 — exact dedup: canonical survivor per identical text (min doc_id,
     // deterministic). One shuffle on the dedup key.
-    "d_dedup_exact" -> ((s, d) =>
+    QueryDef("d_dedup_exact", (s, d) =>
       docs(s, d)
         .groupBy(col("text"))
         .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
         .select(col("doc_id"), col("n_copies"), length(col("text")).as("text_len"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      """SELECT min(doc_id) AS doc_id, CAST(count(*) AS BIGINT) AS n_copies,
+                CAST(length(text) AS INT) AS text_len
+         FROM documents GROUP BY text ORDER BY doc_id"""),
 
     // R17 at scale — dedup keyed on the sha256 content address instead of
     // the full text: the shuffle carries 32 bytes per row, not the document.
-    "d_dedup_hash" -> ((s, d) =>
+    QueryDef("d_dedup_hash", (s, d) =>
       docs(s, d)
         .groupBy(sha256Hex(col("text")).as("content_sha"))
         .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
         .select(col("doc_id"), col("content_sha"), col("n_copies"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      """SELECT min(doc_id) AS doc_id, sha256(text) AS content_sha,
+                CAST(count(*) AS BIGINT) AS n_copies
+         FROM documents GROUP BY sha256(text) ORDER BY doc_id"""),
 
     // R18 — exact n-gram Jaccard between adjacent doc pairs: the
     // SQL-expressible (oracle-able) slice of near-dup detection. The join is
     // equi on (token, doc_id+1) — no cross product.
-    "d_jaccard_pairs" -> ((s, d) => adjacentJaccard(s, d).orderBy("doc_a")),
+    QueryDef("d_jaccard_pairs", (s, d) => adjacentJaccard(s, d).orderBy("doc_a"),
+      """WITH tok AS (
+           SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS tok
+           FROM documents),
+         sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY doc_id),
+         inter AS (
+           SELECT a.doc_id AS doc_a, CAST(count(*) AS BIGINT) AS i
+           FROM tok a JOIN tok b ON a.tok = b.tok AND b.doc_id = a.doc_id + 1
+           GROUP BY a.doc_id)
+         SELECT doc_a, doc_a + 1 AS doc_b,
+                floor((CAST(i AS DOUBLE) / (sa.n + sb.n - i)) * 10000 + 0.5) / 10000 AS jaccard
+         FROM inter
+           JOIN sz sa ON sa.doc_id = doc_a
+           JOIN sz sb ON sb.doc_id = doc_a + 1
+         ORDER BY doc_a"""),
 
     // R17/R18 — dedup clustering: connected components over the near-dup
     // edge set (adjacent-pair Jaccard ≥ 0.5), each doc labeled with its
@@ -214,7 +350,7 @@ object DedupQueries {
     // adversarially long chains the same loop upgrades to pointer-jumping
     // (label ← label-of-label) for O(log n) rounds. The convergence check
     // is one aggregate per iteration (driver-side scalar, not collected data).
-    "d_dedup_cluster" -> ((s, d) => {
+    QueryDef("d_dedup_cluster", (s, d) => {
       // Components run on the EDGE SUBGRAPH only (graft.operators.
       // ConnectedComponents: min-label propagation + pointer jumping,
       // O(log chain) rounds): a doc with no near-dup edge is its own
@@ -235,7 +371,35 @@ object DedupQueries {
           coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"),
           coalesce(col("cluster_size"), lit(1L)).as("cluster_size"))
         .orderBy("doc_id")
-    }),
+    },
+      // Edges only link consecutive doc_ids, so components are maximal runs
+      // of edge-connected consecutive ids: a running max over "run starts"
+      // reproduces min-label propagation exactly.
+      """WITH tok AS (
+           SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS tok
+           FROM documents),
+         sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY doc_id),
+         inter AS (
+           SELECT a.doc_id AS doc_a, CAST(count(*) AS BIGINT) AS i
+           FROM tok a JOIN tok b ON a.tok = b.tok AND b.doc_id = a.doc_id + 1
+           GROUP BY a.doc_id),
+         edge AS (
+           SELECT doc_a FROM inter
+             JOIN sz sa ON sa.doc_id = doc_a
+             JOIN sz sb ON sb.doc_id = doc_a + 1
+           WHERE floor((CAST(i AS DOUBLE) / (sa.n + sb.n - i)) * 10000 + 0.5) / 10000 >= 0.5),
+         marks AS (
+           SELECT d.doc_id,
+                  CASE WHEN e.doc_a IS NULL THEN d.doc_id END AS start_id
+           FROM documents d LEFT JOIN edge e ON e.doc_a = d.doc_id - 1),
+         comp AS (
+           SELECT doc_id,
+                  max(start_id) OVER (ORDER BY doc_id
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cluster_id
+           FROM marks)
+         SELECT doc_id, cluster_id,
+                CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
+         FROM comp ORDER BY doc_id"""),
 
     // R18 — MinHash + LSH near-dup pairs: shingle(3) → 32-hash signature →
     // 8 bands of 4 → explode band keys → self-join per bucket → exact
@@ -257,7 +421,7 @@ object DedupQueries {
     // the span — the span STRINGS never shuffle. A hash collision would
     // merge two spans (~n²/2⁶⁴ odds) and surface as an oracle mismatch,
     // the standard accepted trade for hashed-key span dedup.
-    "d_span_dedup" -> ((s, d) => {
+    QueryDef("d_span_dedup", (s, d) => {
       graft.plans.GraftFunctions.register(s)
       val spans = docs(s, d)
         .select(col("doc_id"), explode(shingles("text", 8)).as("g"))
@@ -279,7 +443,28 @@ object DedupQueries {
             greatest(coalesce(col("n_spans"), lit(0L)), lit(1L)), 4)
             .as("dup_span_frac"))
         .orderBy("doc_id")
-    }),
+    },
+      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+         sh AS (
+           SELECT doc_id,
+                  unnest(list_distinct(list_transform(
+                    range(1, len(t) - 6), i -> array_to_string(t[i:i+7], ' ')))) AS g
+           FROM toks WHERE len(t) >= 8),
+         tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans FROM sh GROUP BY doc_id),
+         shared AS (SELECT g FROM sh GROUP BY g HAVING count(*) > 1),
+         dup AS (
+           SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dup_spans
+           FROM sh JOIN shared USING (g) GROUP BY doc_id)
+         SELECT d.doc_id,
+                CAST(coalesce(tot.n_spans, 0) AS BIGINT) AS n_spans,
+                CAST(coalesce(dup.n_dup_spans, 0) AS BIGINT) AS n_dup_spans,
+                floor((CAST(coalesce(dup.n_dup_spans, 0) AS DOUBLE)
+                       / greatest(coalesce(tot.n_spans, 0), 1)) * 10000 + 0.5) / 10000
+                  AS dup_span_frac
+         FROM documents d
+           LEFT JOIN tot ON tot.doc_id = d.doc_id
+           LEFT JOIN dup ON dup.doc_id = d.doc_id
+         ORDER BY d.doc_id"""),
 
     // R17 — PREFIX-FINGERPRINT dedup (the boilerplate-head blocking trick:
     // crawl corpora carry families of docs sharing an identical opening —
@@ -290,7 +475,19 @@ object DedupQueries {
     // is the span-dedup one: both the groupBy and the join key on the
     // 64-bit xxhash64 of the prefix, so prefix STRINGS never move — 8-byte
     // keys at any scale (hash-collision trade documented at d_span_dedup).
-    "d_prefix_dedup" -> ((s, d) => prefixDedup(docs(s, d), k = 3)),
+    QueryDef("d_prefix_dedup", (s, d) => prefixDedup(docs(s, d), k = 3),
+      // groups by the raw prefix string where Spark groups by its xxhash64 —
+      // equal results absent a 64-bit collision (see the def's provenance note)
+      """WITH p AS (
+           SELECT doc_id,
+                  array_to_string(string_split(text, ' ')[1:3], ' ') AS pre
+           FROM documents),
+         g AS (
+           SELECT pre, CAST(count(*) AS BIGINT) AS n_group,
+                  min(doc_id) AS keeper
+           FROM p GROUP BY pre HAVING count(*) > 1)
+         SELECT p.doc_id, g.n_group, p.doc_id = g.keeper AS keep
+         FROM p JOIN g USING (pre) ORDER BY p.doc_id"""),
 
     // ORACLE-EQUALITY PRECONDITION (this query and both corpus-build
     // capstones that compose it): the DuckDB oracle recomputes exact
@@ -308,27 +505,15 @@ object DedupQueries {
     // band/row counts are chosen so the S-curve midpoint sits below the
     // dedup threshold (more bands ⇒ foot moves left), and the miss rate
     // at the threshold is the published recall guarantee.
-    "d_minhash_lsh" -> ((s, d) => {
-      graft.plans.GraftFunctions.register(s)
-      val base = docs(s, d)
-        .select(col("doc_id"), shingles("text", 3).as("sh"))
-        .filter(size(col("sh")) > 0)
-      // Candidate generation in ONE pass: shingle+sign the corpus once,
-      // shuffle slim (band, h, doc_id) rows, and emit intra-bucket pairs
-      // from each bucket's collected id list — no self-join, so the
-      // signature scan is never recomputed. Buckets are near-singleton for
-      // non-dups, so the per-bucket pair expansion stays tiny; a skewed
-      // bucket (boilerplate dups) is capped by the same m² it would cost in
-      // any LSH formulation.
-      val banded = base
-        .withColumn("sig", expr("graft_minhash(sh)")) // native: one hash pass + k multiply-adds
-        .select(col("doc_id"), explode(minhashBands("sig", 8, 4)).as("band"))
-        .select(col("doc_id"), col("band.band"), col("band.h"))
-      val cand = bucketedCandidatePairs(banded)
-      // Verification: shingle only the docs candidates touch, once each
-      // (verifyPairs), never the whole corpus a second time.
-      verifyPairs(s, d, cand).orderBy("doc_a", "doc_b")
-    }),
+    QueryDef("d_minhash_lsh", minhashLshPairs,
+      // Shared ground truth for both near-dup candidate generators
+      // (d_minhash_lsh, d_simhash_pairs): ALL pairs with distinct-3-shingle
+      // Jaccard ≥ 0.5, via a posting-list join on shingles (only pairs with
+      // nonzero intersection materialize). Because the Spark queries verify
+      // every candidate with the same exact Jaccard before emitting, any
+      // divergence from this oracle is a candidate-recall miss — the oracle
+      // tests the LSH banding / multi-band blocking end-to-end.
+      NearDupTruthSql),
 
     // R18 — SimHash signatures (64-bit), oracled as a dual-implementation
     // consistency check: the native one-pass SimHashSig expression is
@@ -339,7 +524,7 @@ object DedupQueries {
     // order, hash seed) flips the boolean and fails the oracle. The raw
     // signatures and the 16-bit blocking prefix stay spec-tested in
     // DedupSpec; they are hash-valued and so not oracle-able directly.
-    "d_simhash" -> ((s, d) => {
+    QueryDef("d_simhash", (s, d) => {
       graft.plans.GraftFunctions.register(s)
       docs(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
@@ -355,7 +540,10 @@ object DedupQueries {
         .select(col("doc_id"), col("n_tokens"),
           (col("sig_native") === col("sig_hof")).as("native_eq_hof"))
         .orderBy("doc_id")
-    }),
+    },
+      """SELECT doc_id, CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
+                TRUE AS native_eq_hof
+         FROM documents ORDER BY doc_id"""),
 
     // R18 — corpus-overlap between sources via group-level MinHash union
     // (graft.plans.MinHashUnionAgg): element-wise min of per-doc signatures
@@ -378,7 +566,7 @@ object DedupQueries {
     // count the per-shingle fanout is ≤ C(20,2), so it stays linear in
     // corpus size — affordable as the audit twin of the sketch path, which
     // remains the 100 TB form.
-    "d_source_overlap" -> ((s, d) => {
+    QueryDef("d_source_overlap", (s, d) => {
       graft.plans.GraftFunctions.register(s)
       val base = docs(s, d)
         .select(col("source"), shingles("text", 3).as("sh"))
@@ -445,7 +633,26 @@ object DedupQueries {
           floorRound(col("exact_j"), 4).as("exact_jaccard"),
           (abs(col("est_jaccard") - col("exact_j")) <= 0.15).as("est_within_015"))
         .orderBy("source_a", "source_b")
-    }),
+    },
+      """WITH toks AS (SELECT source, string_split(text, ' ') AS t FROM documents),
+         sh AS (
+           SELECT DISTINCT source,
+                  unnest(list_distinct(list_transform(
+                    range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' ')))) AS s
+           FROM toks WHERE len(t) >= 3),
+         sz AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY source),
+         inter AS (
+           SELECT a.source AS source_a, b.source AS source_b,
+                  CAST(count(*) AS BIGINT) AS i
+           FROM sh a JOIN sh b ON a.s = b.s AND a.source < b.source
+           GROUP BY 1, 2)
+         SELECT source_a, source_b,
+                floor((CAST(i AS DOUBLE) / (sa.n + sb.n - i)) * 10000 + 0.5) / 10000 AS exact_jaccard,
+                TRUE AS est_within_015
+         FROM inter
+           JOIN sz sa ON sa.source = source_a
+           JOIN sz sb ON sb.source = source_b
+         ORDER BY source_a, source_b"""),
 
     // R18 — SimHash near-dup pairs via multi-band blocking (Manku/Google
     // simhash dedup): split the 64-bit signature into 8 bands of 8 bits,
@@ -470,7 +677,7 @@ object DedupQueries {
     // shingle-Jaccard and filtered at ≥ 0.5, which makes the output the
     // same ground truth d_minhash_lsh targets — so the DuckDB all-pairs
     // oracle checks this blocking path's recall end-to-end too.
-    "d_simhash_pairs" -> ((s, d) => {
+    QueryDef("d_simhash_pairs", (s, d) => {
       graft.plans.GraftFunctions.register(s)
       import org.apache.spark.sql.expressions.Window
       val sigs = docs(s, d)
@@ -574,221 +781,7 @@ object DedupQueries {
               l2Cap0 = 4 * SimHashBucketCap))
             .dropDuplicates("doc_a", "doc_b"))
         .orderBy("doc_a", "doc_b")
-    })
-  )
-
-  /** The two-level overflow-recovery stage of `d_simhash_pairs` (r14;
-    * WIDENED r20), factored for direct spec drive (Round14Spec plants
-    * hand-built signature rows — band bytes fully controlled). `ranked`
-    * carries (doc_id, sh, n, m, band, h, __sz).
-    *
-    * r20 scale fix — the banding adjustment the L1 cap comment always
-    * prescribed, now implemented and measured: the r14 recovery re-keyed
-    * overflow members by the single (band, h, NEXT-band byte) composite,
-    * which recovers a pair only when its flooded band's cyclic successor
-    * is also clean. The 500k-doc sf10 probe measured the cost of that
-    * narrowness: 591 of 25,600 true pairs lost (2.3%) with every L1
-    * bucket over cap (≈2,000 members vs 512 — 8-bit keys give only 256
-    * buckets/band, so occupancy scales linearly with corpus size).
-    * WIDENED scheme: every doc touching an overflowed L1 bucket emits its
-    * 28 C(8,2) WIDE-BAND keys — the (bandLo, bandHi, byteLo, byteHi)
-    * 16-bit composites — so a pair survives L1 overflow iff it has ANY
-    * TWO clean bands (vs: two cyclically-ADJACENT clean bands). Wide
-    * buckets have 65,536 keys per band pair: occupancy stays ≲ cap up to
-    * ~33M docs/shard, two decades past the L1 cliff; past that the L2 cap
-    * binds and the residual is again OBSERVED, not silent
-    * (`simhash_bucket_overflow_l2`). Pairs whose every agreeing band pair
-    * involves a flooded byte remain the honest residual. Cost is sized by
-    * the overflow mass only (zero rows on a healthy corpus); extra
-    * candidates can never add false pairs — the exact verify gates
-    * everything.
-    * Returns (doc_a, doc_b) candidates for the exact verify.
-    */
-  private[graft] def simhashOverflowCandidates(ranked: DataFrame,
-                                               cap: Int,
-                                               l2Cap0: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // Wide buckets are 256× finer than L1, so their cap can be higher at
-    // the same worst-case join cost; callers pass l2Cap (d_simhash_pairs
-    // uses 4×cap — measured at sf10 to claw back L2-cap losses) or leave
-    // 0 to inherit `cap` (the spec fixtures pin the residual semantics
-    // at the tight cap).
-    val l2Cap = if (l2Cap0 > 0) l2Cap0 else cap
-    // distinct docs involved in ANY overflowed L1 bucket — membership in
-    // one flooded bucket is what voids the L1 pigeonhole for this doc
-    val overDocs = ranked.filter(col("__sz") > cap)
-      .select(col("doc_id"), col("sh"), col("n"), col("m"))
-      .dropDuplicates("doc_id")
-    val wide = overDocs.select(col("doc_id"), col("sh"), col("n"), col("m"),
-      explode(expr(
-        """flatten(transform(sequence(0, 6), lo ->
-             transform(sequence(lo + 1, 7), hi ->
-               struct(lo AS blo, hi AS bhi,
-                 shiftrightunsigned(sh, lo * 8) & 255L AS hlo,
-                 shiftrightunsigned(sh, hi * 8) & 255L AS hhi))))""")).as("wk"))
-      .select(col("doc_id"), col("sh"), col("n"), col("m"),
-        col("wk.blo"), col("wk.bhi"), col("wk.hlo"), col("wk.hhi"))
-    val wB2 = Window.partitionBy(col("blo"), col("bhi"), col("hlo"), col("hhi"))
-      .orderBy(col("doc_id"))
-    val over2 = wide
-      .withColumn("__r2", row_number().over(wB2))
-      .observe("simhash_bucket_overflow_l2",
-        sum(when(col("__r2") > l2Cap, 1L).otherwise(0L)).as("members_cut"),
-        max(col("__r2")).as("max_bucket"))
-      .filter(col("__r2") <= l2Cap)
-      .drop("__r2")
-    val tauOver = simhashTau(col("a.n"), col("b.n"))
-    over2.as("a")
-      .join(over2.as("b"),
-        col("a.blo") === col("b.blo") && col("a.bhi") === col("b.bhi") &&
-          col("a.hlo") === col("b.hlo") && col("a.hhi") === col("b.hhi") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          bit_count(col("a.sh").bitwiseXOR(col("b.sh"))) <= tauOver &&
-          lit(2) * least(col("a.m"), col("b.m")) >= greatest(col("a.m"), col("b.m")))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-  }
-
-  private val NearDupTruthSql =
-    """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       sh AS (
-         SELECT doc_id,
-                unnest(list_distinct(list_transform(
-                  range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' ')))) AS s
-         FROM toks WHERE len(t) >= 3),
-       sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id),
-       inter AS (
-         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS i
-         FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-         GROUP BY 1, 2)
-       SELECT doc_a, doc_b,
-              floor((CAST(i AS DOUBLE) / (sa.n + sb.n - i)) * 10000 + 0.5) / 10000 AS jaccard
-       FROM inter
-         JOIN sz sa ON sa.doc_id = doc_a
-         JOIN sz sb ON sb.doc_id = doc_b
-       WHERE floor((CAST(i AS DOUBLE) / (sa.n + sb.n - i)) * 10000 + 0.5) / 10000 >= 0.5
-       ORDER BY doc_a, doc_b"""
-
-  val oracles: Map[String, String] = Map(
-    "d_span_dedup" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         sh AS (
-           SELECT doc_id,
-                  unnest(list_distinct(list_transform(
-                    range(1, len(t) - 6), i -> array_to_string(t[i:i+7], ' ')))) AS g
-           FROM toks WHERE len(t) >= 8),
-         tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans FROM sh GROUP BY doc_id),
-         shared AS (SELECT g FROM sh GROUP BY g HAVING count(*) > 1),
-         dup AS (
-           SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dup_spans
-           FROM sh JOIN shared USING (g) GROUP BY doc_id)
-         SELECT d.doc_id,
-                CAST(coalesce(tot.n_spans, 0) AS BIGINT) AS n_spans,
-                CAST(coalesce(dup.n_dup_spans, 0) AS BIGINT) AS n_dup_spans,
-                floor((CAST(coalesce(dup.n_dup_spans, 0) AS DOUBLE)
-                       / greatest(coalesce(tot.n_spans, 0), 1)) * 10000 + 0.5) / 10000
-                  AS dup_span_frac
-         FROM documents d
-           LEFT JOIN tot ON tot.doc_id = d.doc_id
-           LEFT JOIN dup ON dup.doc_id = d.doc_id
-         ORDER BY d.doc_id""",
-    // groups by the raw prefix string where Spark groups by its xxhash64 —
-    // equal results absent a 64-bit collision (see the def's provenance note)
-    "d_prefix_dedup" ->
-      """WITH p AS (
-           SELECT doc_id,
-                  array_to_string(string_split(text, ' ')[1:3], ' ') AS pre
-           FROM documents),
-         g AS (
-           SELECT pre, CAST(count(*) AS BIGINT) AS n_group,
-                  min(doc_id) AS keeper
-           FROM p GROUP BY pre HAVING count(*) > 1)
-         SELECT p.doc_id, g.n_group, p.doc_id = g.keeper AS keep
-         FROM p JOIN g USING (pre) ORDER BY p.doc_id""",
-    "d_dedup_exact" ->
-      """SELECT min(doc_id) AS doc_id, CAST(count(*) AS BIGINT) AS n_copies,
-                CAST(length(text) AS INT) AS text_len
-         FROM documents GROUP BY text ORDER BY doc_id""",
-    "d_dedup_hash" ->
-      """SELECT min(doc_id) AS doc_id, sha256(text) AS content_sha,
-                CAST(count(*) AS BIGINT) AS n_copies
-         FROM documents GROUP BY sha256(text) ORDER BY doc_id""",
-    // Edges only link consecutive doc_ids, so components are maximal runs
-    // of edge-connected consecutive ids: a running max over "run starts"
-    // reproduces min-label propagation exactly.
-    "d_dedup_cluster" ->
-      """WITH tok AS (
-           SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS tok
-           FROM documents),
-         sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY doc_id),
-         inter AS (
-           SELECT a.doc_id AS doc_a, CAST(count(*) AS BIGINT) AS i
-           FROM tok a JOIN tok b ON a.tok = b.tok AND b.doc_id = a.doc_id + 1
-           GROUP BY a.doc_id),
-         edge AS (
-           SELECT doc_a FROM inter
-             JOIN sz sa ON sa.doc_id = doc_a
-             JOIN sz sb ON sb.doc_id = doc_a + 1
-           WHERE floor((CAST(i AS DOUBLE) / (sa.n + sb.n - i)) * 10000 + 0.5) / 10000 >= 0.5),
-         marks AS (
-           SELECT d.doc_id,
-                  CASE WHEN e.doc_a IS NULL THEN d.doc_id END AS start_id
-           FROM documents d LEFT JOIN edge e ON e.doc_a = d.doc_id - 1),
-         comp AS (
-           SELECT doc_id,
-                  max(start_id) OVER (ORDER BY doc_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cluster_id
-           FROM marks)
-         SELECT doc_id, cluster_id,
-                CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
-         FROM comp ORDER BY doc_id""",
-    // Shared ground truth for both near-dup candidate generators
-    // (d_minhash_lsh, d_simhash_pairs): ALL pairs with distinct-3-shingle
-    // Jaccard ≥ 0.5, via a posting-list join on shingles (only pairs with
-    // nonzero intersection materialize). Because the Spark queries verify
-    // every candidate with the same exact Jaccard before emitting, any
-    // divergence from this oracle is a candidate-recall miss — the oracle
-    // tests the LSH banding / multi-band blocking end-to-end.
-    "d_minhash_lsh" -> NearDupTruthSql,
-    "d_simhash_pairs" -> NearDupTruthSql,
-    "d_simhash" ->
-      """SELECT doc_id, CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-                TRUE AS native_eq_hof
-         FROM documents ORDER BY doc_id""",
-    "d_source_overlap" ->
-      """WITH toks AS (SELECT source, string_split(text, ' ') AS t FROM documents),
-         sh AS (
-           SELECT DISTINCT source,
-                  unnest(list_distinct(list_transform(
-                    range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' ')))) AS s
-           FROM toks WHERE len(t) >= 3),
-         sz AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY source),
-         inter AS (
-           SELECT a.source AS source_a, b.source AS source_b,
-                  CAST(count(*) AS BIGINT) AS i
-           FROM sh a JOIN sh b ON a.s = b.s AND a.source < b.source
-           GROUP BY 1, 2)
-         SELECT source_a, source_b,
-                floor((CAST(i AS DOUBLE) / (sa.n + sb.n - i)) * 10000 + 0.5) / 10000 AS exact_jaccard,
-                TRUE AS est_within_015
-         FROM inter
-           JOIN sz sa ON sa.source = source_a
-           JOIN sz sb ON sb.source = source_b
-         ORDER BY source_a, source_b""",
-    "d_jaccard_pairs" ->
-      """WITH tok AS (
-           SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS tok
-           FROM documents),
-         sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY doc_id),
-         inter AS (
-           SELECT a.doc_id AS doc_a, CAST(count(*) AS BIGINT) AS i
-           FROM tok a JOIN tok b ON a.tok = b.tok AND b.doc_id = a.doc_id + 1
-           GROUP BY a.doc_id)
-         SELECT doc_a, doc_a + 1 AS doc_b,
-                floor((CAST(i AS DOUBLE) / (sa.n + sb.n - i)) * 10000 + 0.5) / 10000 AS jaccard
-         FROM inter
-           JOIN sz sa ON sa.doc_id = doc_a
-           JOIN sz sb ON sb.doc_id = doc_a + 1
-         ORDER BY doc_a"""
+    },
+      NearDupTruthSql)
   )
 }

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.StringType
 
 /** The reference's per-message data plane, re-expressed as columnar Spark
   * operators (SURVEY.md §2.2).
@@ -72,14 +72,6 @@ object Envelope {
     * exactly when the body does not parse.
     */
   def isValidJson(body: Column): Column = get_json_object(body, "$").isNotNull
-
-  /** P4 variant used by the registered queries: enrichment expressed
-    * relationally (columns, not a re-serialized JSON string) so the DuckDB
-    * oracle can mirror it exactly.
-    */
-  def enrichRelational(df: DataFrame, body: String, ordinal: String, tsMillis: Column): DataFrame =
-    df.withColumn("ess_ordinal", col(ordinal).cast(LongType))
-      .withColumn("ess_timestamp", tsMillis)
 
   /** P5 — protobuf-text enrichment (reference/app/app.py:490-494,
     * README.md:137-145): append `|ordinal: N|timestamp: M` to the raw

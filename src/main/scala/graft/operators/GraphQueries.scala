@@ -63,7 +63,7 @@ object GraphQueries {
     * is TWO stacked explodes + a codegen'd a < b filter, not a nested
     * transform×transform HOF (r21): higher-order functions evaluate as
     * interpreted per-element lambdas outside whole-stage codegen, and the
-    * HOF form was the graph family's dominant exec cost (StageProbe: 10 s
+    * HOF form was the graph family's dominant exec cost (QueryProbe stages: 10 s
     * executor time in the pair stage at sf0.1; the d_simhash_pairs pair
     * join learned the same lesson in r11). Generate participates in
     * codegen, and the pair SET is identical — every consumer is
@@ -377,41 +377,15 @@ object GraphQueries {
   // already guarded against
   private def edgeCte = pairsCte(materialized = true)
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[QueryDef] = Seq(
     // R4/R13-adjacent, graph family — PageRank over the co-purchase
     // backbone: 5 integer-unit damped iterations. The capped edge frame is
     // materialized once (eager localCheckpoint — see the object Scaladoc;
     // the r9 ReuseExchange approach re-executed the pair-gen subtree), and
     // sub-threshold frames run the single-task endgame (PlanSpec pins the
     // endgame shape: no FileScan in the final plan).
-    "g_pagerank" -> ((s, d) => pagerank(coPurchaseEdges(Tables.lineitem(s, d)))),
-
-    // Graph family — exact triangle census + global clustering
-    // coefficient on the same capped backbone: oriented two-join
-    // enumeration (sub-quadratic on skew), wedge count from degrees,
-    // 3T/W on the 4-dp parity dial.
-    "g_triangles" -> ((s, d) => triangles(coPurchaseEdges(Tables.lineitem(s, d)))),
-
-    // Graph family — connected-component size census via the shared
-    // min-label-propagation engine (pointer jumping, O(log path) rounds);
-    // ordered by (size desc, label) — a total order, labels unique.
-    "g_components" -> ((s, d) => components(coPurchaseEdges(Tables.lineitem(s, d)))),
-
-    // Graph family (r11) — edge-weighted PageRank: importance flows along
-    // frequent co-purchase pairings instead of splitting evenly; same
-    // integer recurrence, weight-proportional mass split, dual-path.
-    "g_pagerank_weighted" -> ((s, d) =>
-      pagerankWeighted(coPurchaseEdges(Tables.lineitem(s, d)))),
-
-    // Graph family (r11) — 2-core of the co-purchase backbone: iterative
-    // degree peel to the fixpoint (converges in ≤5 rounds here; the
-    // `converged` column is oracled so a non-fixpoint can never pass
-    // silently). The dense-backbone extraction step of graph curation.
-    "g_kcore" -> ((s, d) => kcore(coPurchaseEdgesByKey(Tables.lineitem(s, d))))
-  )
-
-  val oracles: Map[String, String] = Map(
-    "g_pagerank" -> {
+    QueryDef("g_pagerank", (s, d) => pagerank(coPurchaseEdges(Tables.lineitem(s, d))),
+    {
       // r0..r(iters) unrolled: the same integer recurrence the Spark loop runs.
       val iter = (i: Int) =>
         s"""r$i AS (SELECT e.dst AS node,
@@ -425,8 +399,13 @@ object GraphQueries {
           ${(1 to PagerankIters).map(iter).mkString(",\n")}
           SELECT node, r AS rank_units FROM r$PagerankIters
           ORDER BY rank_units DESC, node LIMIT $PagerankTopK"""
-    },
-    "g_triangles" ->
+    }),
+
+    // Graph family — exact triangle census + global clustering
+    // coefficient on the same capped backbone: oriented two-join
+    // enumeration (sub-quadratic on skew), wedge count from degrees,
+    // 3T/W on the 4-dp parity dial.
+    QueryDef("g_triangles", (s, d) => triangles(coPurchaseEdges(Tables.lineitem(s, d))),
       s"""$edgeCte,
           tri AS (SELECT count(*) AS n_triangles
                   FROM capped e1
@@ -443,8 +422,12 @@ object GraphQueries {
                  CASE WHEN st.n_wedges > 0
                       THEN ${floorRoundSql("3 * tri.n_triangles / CAST(st.n_wedges AS DOUBLE)", 4)}
                       ELSE 0.0 END AS global_clustering
-          FROM st, tri""",
-    "g_components" ->
+          FROM st, tri"""),
+
+    // Graph family — connected-component size census via the shared
+    // min-label-propagation engine (pointer jumping, O(log path) rounds);
+    // ordered by (size desc, label) — a total order, labels unique.
+    QueryDef("g_components", (s, d) => components(coPurchaseEdges(Tables.lineitem(s, d))),
       s"""${pairsCte(recursive = true, materialized = true)},
           n AS (SELECT DISTINCT src AS node FROM e),
           reach(node, label) AS (
@@ -456,8 +439,14 @@ object GraphQueries {
           m AS (SELECT node, min(label) AS root FROM reach GROUP BY node)
           SELECT root AS label, CAST(count(*) AS BIGINT) AS size
           FROM m GROUP BY root
-          ORDER BY size DESC, label""",
-    "g_pagerank_weighted" -> {
+          ORDER BY size DESC, label"""),
+
+    // Graph family (r11) — edge-weighted PageRank: importance flows along
+    // frequent co-purchase pairings instead of splitting evenly; same
+    // integer recurrence, weight-proportional mass split, dual-path.
+    QueryDef("g_pagerank_weighted", (s, d) =>
+      pagerankWeighted(coPurchaseEdges(Tables.lineitem(s, d))),
+    {
       // the weighted recurrence unrolled: one truncating div per node
       // (c = r // wdeg), exact integer edge contributions c·w summed at dst
       val iter = (i: Int) =>
@@ -473,9 +462,14 @@ object GraphQueries {
           ${(1 to PagerankIters).map(iter).mkString(",\n")}
           SELECT node, r AS rank_units FROM r$PagerankIters
           ORDER BY rank_units DESC, node LIMIT $PagerankTopK"""
-    },
+    }),
 
-    "g_kcore" -> {
+    // Graph family (r11) — 2-core of the co-purchase backbone: iterative
+    // degree peel to the fixpoint (converges in ≤5 rounds here; the
+    // `converged` column is oracled so a non-fixpoint can never pass
+    // silently). The dense-backbone extraction step of graph curation.
+    QueryDef("g_kcore", (s, d) => kcore(coPurchaseEdgesByKey(Tables.lineitem(s, d))),
+    {
       // a0..aR unrolled peel — MATERIALIZED is required: each round
       // references the previous twice, and DuckDB's default CTE inlining
       // would re-evaluate the whole chain 2^rounds times.
@@ -497,6 +491,6 @@ object GraphQueries {
                  JOIN a$KcoreRounds t ON e.dst = t.n, conv
           GROUP BY e.src, conv.converged
           ORDER BY node"""
-    }
+    })
   )
 }

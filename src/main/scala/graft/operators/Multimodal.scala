@@ -85,10 +85,10 @@ object Multimodal {
 /** Registered multimodal queries. */
 object MultimodalQueries {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[QueryDef] = Seq(
     // R21 — metadata projection over binary payloads: content address,
     // byte length, shard key (hash prefix → even blob distribution at scale).
-    "m_binary_meta" -> ((s, d) =>
+    QueryDef("m_binary_meta", (s, d) =>
       Multimodal.assets(s, d)
         .select(
           col("asset_id"),
@@ -97,44 +97,38 @@ object MultimodalQueries {
           col("meta.n_bytes").as("n_bytes"),
           col("meta.sha").as("sha"),
           substring(col("meta.sha"), 1, 2).as("shard"))
-        .orderBy("asset_id")),
+        .orderBy("asset_id"),
+      """SELECT doc_id AS asset_id, 'text' AS modality, 'text/plain' AS mime,
+                CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes,
+                sha256(text) AS sha, substring(sha256(text), 1, 2) AS shard
+         FROM documents ORDER BY asset_id"""),
 
     // R21 — grouped storage accounting by shard key: the partition-balance
     // readout (even shards ⇒ even executors at 100 TB).
-    "m_shard_balance" -> ((s, d) =>
+    QueryDef("m_shard_balance", (s, d) =>
       Multimodal.assets(s, d)
         .groupBy(substring(col("meta.sha"), 1, 1).as("shard"))
         .agg(
           count(lit(1)).as("n_assets"),
           sum(col("meta.n_bytes")).as("total_bytes"))
-        .orderBy("shard")),
+        .orderBy("shard"),
+      """SELECT substring(sha256(text), 1, 1) AS shard,
+                CAST(count(*) AS BIGINT) AS n_assets,
+                CAST(sum(octet_length(CAST(text AS BLOB))) AS BIGINT) AS total_bytes
+         FROM documents GROUP BY 1 ORDER BY shard"""),
 
     // R21 — stubbed decode/feature-extract through the partition-batched
     // UDF path; the deterministic fake (byte-histogram moments) is
     // replicated in the oracle SQL, so even the mapPartitions path is
     // DuckDB-verified; semantics also unit-tested in MultimodalSpec.
-    "m_decode_features" -> ((s, d) =>
+    QueryDef("m_decode_features", (s, d) =>
       Multimodal.decodeStub(s, Multimodal.assets(s, d))
         .select(col("asset_id"), col("modality"), col("n_bytes"),
           floorRound(element_at(col("feature"), 1), 4).as("f0"),
           floorRound(element_at(col("feature"), 8), 4).as("f7"))
-        .orderBy("asset_id"))
-  )
-
-  val oracles: Map[String, String] = Map(
-    "m_binary_meta" ->
-      """SELECT doc_id AS asset_id, 'text' AS modality, 'text/plain' AS mime,
-                CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes,
-                sha256(text) AS sha, substring(sha256(text), 1, 2) AS shard
-         FROM documents ORDER BY asset_id""",
-    "m_shard_balance" ->
-      """SELECT substring(sha256(text), 1, 1) AS shard,
-                CAST(count(*) AS BIGINT) AS n_assets,
-                CAST(sum(octet_length(CAST(text AS BLOB))) AS BIGINT) AS total_bytes
-         FROM documents GROUP BY 1 ORDER BY shard""",
-    // byte-histogram moments of the ASCII payload, slot = byte index % 8 —
-    // the SQL twin of Multimodal.decodeStub's per-partition loop
-    "m_decode_features" ->
+        .orderBy("asset_id"),
+      // byte-histogram moments of the ASCII payload, slot = byte index % 8 —
+      // the SQL twin of Multimodal.decodeStub's per-partition loop
       """WITH b AS (
            SELECT doc_id, length(text) AS n, t.i % 8 AS slot,
                   ascii(substring(text, CAST(t.i + 1 AS INT), 1)) / 255.0 AS v
@@ -143,6 +137,6 @@ object MultimodalQueries {
          SELECT doc_id AS asset_id, 'text' AS modality, CAST(max(n) AS BIGINT) AS n_bytes,
                 floor((round(max(CASE WHEN slot = 0 THEN sv END) / max(n) * 10000) / 10000) * 10000 + 0.5) / 10000 AS f0,
                 floor((round(max(CASE WHEN slot = 7 THEN sv END) / max(n) * 10000) / 10000) * 10000 + 0.5) / 10000 AS f7
-         FROM s GROUP BY doc_id ORDER BY asset_id"""
+         FROM s GROUP BY doc_id ORDER BY asset_id""")
   )
 }

@@ -84,7 +84,7 @@ object Round12Queries {
       .orderBy("doc_id")
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[QueryDef] = Seq(
 
     // R17/R7 — TRAIN/VAL/TEST HASH SPLIT + LEAKAGE AUDIT. Split
     // assignment must be a pure function of a stable key (re-runs and
@@ -97,7 +97,7 @@ object Round12Queries {
     // for the split counts + a broadcast-able distinct-hash semi-join
     // (train-hash set is corpus-distinct-sized; at 100 TB it becomes a
     // shuffle semi-join on the 16-byte hash — never on text).
-    "q_hash_split" -> ((s, d) => {
+    QueryDef("q_hash_split", (s, d) => {
       val bucket = ((col("doc_id") % lit(2147483648L)) * lit(1103515245L) +
         lit(12345L)) % lit(2147483648L) % 100
       val assigned = docs(s, d).select(
@@ -125,7 +125,31 @@ object Round12Queries {
           floorRound(col("n_docs").cast("double") / col("n_total"), 4).as("pct"),
           coalesce(col("n_leaked"), lit(0L)).as("n_leaked_from_train"))
         .orderBy("split")
-    }),
+    },
+      """WITH a AS (
+           SELECT doc_id,
+                  CASE WHEN ((doc_id % 2147483648) * 1103515245 + 12345)
+                         % 2147483648 % 100 < 80 THEN 'train'
+                       WHEN ((doc_id % 2147483648) * 1103515245 + 12345)
+                         % 2147483648 % 100 < 90 THEN 'val'
+                       ELSE 'test' END AS split,
+                  md5(text) AS h
+           FROM documents),
+         th AS (SELECT DISTINCT h FROM a WHERE split = 'train'),
+         lk AS (
+           SELECT split, CAST(count(*) AS BIGINT) AS n_leaked
+           FROM a WHERE split <> 'train' AND h IN (SELECT h FROM th)
+           GROUP BY split),
+         tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM documents),
+         cnt AS (SELECT split, CAST(count(*) AS BIGINT) AS n_docs
+                 FROM a GROUP BY split)
+         SELECT c.split, c.n_docs,
+                floor(CAST(c.n_docs AS DOUBLE) / tot.n_total
+                      * 10000 + 0.5) / 10000 AS pct,
+                coalesce(lk.n_leaked, 0) AS n_leaked_from_train
+         FROM cnt c CROSS JOIN tot
+         LEFT JOIN lk ON lk.split = c.split
+         ORDER BY c.split"""),
 
     // R20/R7 — TEMPERATURE-α SOURCE MIXING (α = 0.7, the standard
     // multilingual-upsampling temperature): per-source token masses
@@ -140,7 +164,7 @@ object Round12Queries {
     // (the house +0.5 offset dampens boundary flips) — and EVERYTHING
     // downstream (weight, exp_tokens_1m, epochs) derives from that single
     // BIGINT, never re-touching the raw double.
-    "t_mix_weights" -> ((s, d) => {
+    QueryDef("t_mix_weights", (s, d) => {
       val bySrc = docs(s, d)
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
@@ -170,7 +194,24 @@ object Round12Queries {
           floorRound(col("wu").cast("double") /
             col("n_tokens").cast("double"), 4).as("epochs"))
         .orderBy("source")
-    }),
+    },
+      """WITH bysrc AS (
+           SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+                  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
+           FROM documents GROUP BY source),
+         z AS (SELECT sum(pow(CAST(n_tokens AS DOUBLE), 0.7)) AS z FROM bysrc),
+         w AS (
+           SELECT source, n_docs, n_tokens,
+                  CAST(floor(pow(CAST(n_tokens AS DOUBLE), 0.7) / z
+                             * 1000000 + 0.5) AS BIGINT) AS wu
+           FROM bysrc, z)
+         SELECT source, n_docs, n_tokens,
+                floor(CAST(wu AS DOUBLE) / 1000000 * 10000 + 0.5) / 10000
+                  AS weight,
+                wu AS exp_tokens_1m,
+                floor(CAST(wu AS DOUBLE) / CAST(n_tokens AS DOUBLE)
+                      * 10000 + 0.5) / 10000 AS epochs
+         FROM w ORDER BY source"""),
 
     // R20/R12 — CONTEXT-WINDOW CHUNKING: the (doc, chunk) table a
     // trainer consumes — fixed window, fixed stride, tail kept.
@@ -180,7 +221,7 @@ object Round12Queries {
     // shuffle at all until the output sort. At 100 TB this is the shape
     // that matters: chunk boundaries are computed from counts, so the
     // corpus text is scanned once and only (doc_id, offsets) rows flow.
-    "t_chunk_windows" -> ((s, d) => {
+    QueryDef("t_chunk_windows", (s, d) => {
       val w = lit(ChunkWindow)
       val st = lit(ChunkStride)
       val nTok = size(split(col("text"), " "))
@@ -197,7 +238,25 @@ object Round12Queries {
           (least(col("chunk_idx") * st + w, col("n_tokens")) -
             col("chunk_idx") * st).as("n_chunk_tokens"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    },
+      s"""WITH t AS (
+           SELECT doc_id,
+                  CAST(len(string_split(text, ' ')) AS INT) AS n_tokens
+           FROM documents),
+         n AS (
+           SELECT doc_id, n_tokens,
+                  1 + CAST(ceil(CAST(greatest(n_tokens - $ChunkWindow, 0)
+                                     AS DOUBLE) / $ChunkStride) AS INT)
+                    AS n_chunks
+           FROM t)
+         SELECT doc_id, CAST(u.i AS INT) AS chunk_idx,
+                CAST(u.i * $ChunkStride AS INT) AS tok_start,
+                CAST(least(u.i * $ChunkStride + $ChunkWindow, n_tokens)
+                     AS INT) AS tok_end,
+                CAST(least(u.i * $ChunkStride + $ChunkWindow, n_tokens)
+                     - u.i * $ChunkStride AS INT) AS n_chunk_tokens
+         FROM n, LATERAL (SELECT unnest(range(n.n_chunks)) AS i) u
+         ORDER BY doc_id, chunk_idx"""),
 
     // R20/R7 — CURRICULUM BINNING: stage the corpus into four quality
     // quartiles (the easy→hard schedule curriculum training consumes),
@@ -208,7 +267,7 @@ object Round12Queries {
     // discipline) — a global ntile would be a corpus-wide sort, the
     // flagged anti-pattern, while cut-comparison is one corpus pass +
     // a 3-double broadcast at any scale.
-    "t_curriculum_bins" -> ((s, d) => {
+    QueryDef("t_curriculum_bins", (s, d) => {
       val toks = split(col("text"), " ")
       val scored = docs(s, d).select(
         col("doc_id"), size(toks).cast("long").as("n_tokens"),
@@ -227,7 +286,38 @@ object Round12Queries {
           sum(col("n_tokens")).as("token_budget"),
           floorRound(avg(col("q")), 4).as("avg_quality"))
         .orderBy("stage")
-    }),
+    },
+      """WITH t AS (
+           SELECT doc_id,
+                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+                  CAST(len(string_split(text, ' ')) AS DOUBLE) AS n_tok,
+                  CAST(len(list_filter(string_split(text, ' '),
+                        x -> x IN ('the', 'a'))) AS DOUBLE) AS stop_hits,
+                  CAST(len(text) - (len(string_split(text, ' ')) - 1) AS DOUBLE)
+                    / len(string_split(text, ' ')) AS avg_len,
+                  CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
+                    / len(string_split(text, ' ')) AS diversity
+           FROM documents),
+         s AS (
+           SELECT doc_id, n_tokens,
+                  floor((0.5 * diversity + 0.3 * (1.0 - stop_hits / n_tok)
+                         + 0.2 * least(avg_len / 10.0, 1.0))
+                        * 10000 + 0.5) / 10000 AS q
+           FROM t),
+         c AS (SELECT quantile_cont(q, [0.25, 0.5, 0.75]) AS c FROM s),
+         st AS (
+           SELECT s.n_tokens, s.q,
+                  1 + CASE WHEN s.q > floor(c.c[1] * 10000 + 0.5) / 10000
+                           THEN 1 ELSE 0 END
+                    + CASE WHEN s.q > floor(c.c[2] * 10000 + 0.5) / 10000
+                           THEN 1 ELSE 0 END
+                    + CASE WHEN s.q > floor(c.c[3] * 10000 + 0.5) / 10000
+                           THEN 1 ELSE 0 END AS stage
+           FROM s, c)
+         SELECT stage, CAST(count(*) AS BIGINT) AS n_docs,
+                CAST(sum(n_tokens) AS BIGINT) AS token_budget,
+                floor(avg(q) * 10000 + 0.5) / 10000 AS avg_quality
+         FROM st GROUP BY stage ORDER BY stage"""),
 
     // R20 — TOKENIZER VOCABULARY COVERAGE / OOV RATE: fix the vocab to
     // the corpus's top-100 tokens (frequency desc, token asc — ties
@@ -238,7 +328,28 @@ object Round12Queries {
     // corpus-sized), top-K via the heap (TakeOrdered), and the per-doc
     // pass joins exploded tokens against the BROADCAST vocab — the
     // corpus shuffles on doc_id only for its own per-doc count.
-    "t_oov_rate" -> ((s, d) => oovRate(docs(s, d))),
+    QueryDef("t_oov_rate", (s, d) => oovRate(docs(s, d)),
+      """WITH toks AS (
+           SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+           FROM documents),
+         vocab AS (
+           SELECT tok FROM (
+             SELECT tok, count(*) AS n FROM toks GROUP BY tok
+             ORDER BY n DESC, tok LIMIT 100)),
+         oov AS (
+           SELECT doc_id, CAST(count(*) AS BIGINT) AS n_oov
+           FROM toks WHERE tok NOT IN (SELECT tok FROM vocab)
+           GROUP BY doc_id),
+         base AS (
+           SELECT doc_id,
+                  CAST(len(string_split(text, ' ')) AS INT) AS n_tokens
+           FROM documents)
+         SELECT b.doc_id, b.n_tokens,
+                coalesce(o.n_oov, 0) AS n_oov,
+                floor(coalesce(o.n_oov, 0) / CAST(b.n_tokens AS DOUBLE)
+                      * 10000 + 0.5) / 10000 AS oov_rate
+         FROM base b LEFT JOIN oov o ON o.doc_id = b.doc_id
+         ORDER BY b.doc_id"""),
 
     // R22/R7 — K-ANONYMITY AUDIT (k = 5) over the (event_type, day)
     // quasi-identifier: the data-governance gate a corpus passes before
@@ -247,7 +358,7 @@ object Round12Queries {
     // (group-count-sized, not corpus-sized) folds the violation census:
     // groups below k, records at risk, and the suppression fraction the
     // release would need. Integer-exact throughout.
-    "q_k_anonymity" -> ((s, d) => {
+    QueryDef("q_k_anonymity", (s, d) => {
       val groups = Tables.events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n"))
@@ -261,7 +372,21 @@ object Round12Queries {
           floorRound(col("n_records_at_risk").cast("double") /
             col("n_records"), 6).as("suppression_frac"),
           (col("n_violating") === 0).as("k_anonymous"))
-    }),
+    },
+      """WITH g AS (
+           SELECT event_type, CAST(ts AS DATE) AS day,
+                  CAST(count(*) AS BIGINT) AS n
+           FROM events GROUP BY 1, 2)
+         SELECT CAST(count(*) AS BIGINT) AS n_groups,
+                CAST(sum(CASE WHEN n < 5 THEN 1 ELSE 0 END) AS BIGINT)
+                  AS n_violating,
+                CAST(sum(CASE WHEN n < 5 THEN n ELSE 0 END) AS BIGINT)
+                  AS n_records_at_risk,
+                floor(sum(CASE WHEN n < 5 THEN n ELSE 0 END)
+                      / CAST(sum(n) AS DOUBLE) * 1000000 + 0.5) / 1000000
+                  AS suppression_frac,
+                sum(CASE WHEN n < 5 THEN 1 ELSE 0 END) = 0 AS k_anonymous
+         FROM g"""),
 
     // R19 — LATE-INTERACTION (ColBERT-style) MAXSIM PROBE: each 64-dim
     // vector read as EIGHT 8-dim token-vectors (the multi-vector doc
@@ -272,7 +397,7 @@ object Round12Queries {
     // the 8 maxes, and the sum exactly. Scale shape: a pure per-row
     // fold (64 8-dim dots/row) against one broadcast probe row + heap
     // top-10 — zero corpus shuffle, the v_pq_adc discipline.
-    "v_maxsim_probe" -> ((s, d) => {
+    QueryDef("v_maxsim_probe", (s, d) => {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"),
           expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -288,7 +413,27 @@ object Round12Queries {
                    * 10000 + 0.5) AS BIGINT)))) AS BIGINT)""").as("maxsim_units"))
         .orderBy(col("maxsim_units").desc, col("vec_id"))
         .limit(10)
-    }),
+    },
+      """WITH ex AS (
+           SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS e,
+                  generate_subscripts(embedding, 1) AS i
+           FROM embeddings WHERE len(embedding) = 64),
+         sub AS (
+           SELECT vec_id, CAST((i - 1) // 8 AS INT) AS ss, (i - 1) % 8 AS k, e
+           FROM ex),
+         q AS (SELECT ss AS qi, k, e FROM sub WHERE vec_id = 0),
+         dots AS (
+           SELECT s.vec_id, q.qi, s.ss AS dj,
+                  CAST(floor(sum(q.e * s.e) * 10000 + 0.5) AS BIGINT) AS d
+           FROM sub s JOIN q ON q.k = s.k
+           WHERE s.vec_id <> 0
+           GROUP BY 1, 2, 3),
+         mx AS (SELECT vec_id, qi, max(d) AS m FROM dots GROUP BY 1, 2),
+         score AS (
+           SELECT vec_id, CAST(sum(m) AS BIGINT) AS maxsim_units
+           FROM mx GROUP BY 1)
+         SELECT vec_id, maxsim_units FROM score
+         ORDER BY maxsim_units DESC, vec_id LIMIT 10"""),
 
     // R7/R22 — POPULATION STABILITY INDEX between the first and second
     // half of the event stream (split at the median event_id, buckets =
@@ -302,7 +447,7 @@ object Round12Queries {
     // contributes its (p−q)ln(p/q) smoothing term, exactly like the
     // streaming twin psiDriftWindows's 10 conditional sums (ADVICE r12:
     // without the spine the two twins disagreed on identical data).
-    "q_psi_drift" -> ((s, d) => {
+    QueryDef("q_psi_drift", (s, d) => {
       val ev = Tables.events(s, d).select(col("event_id"), col("value"))
       // split point = integer midpoint of the id range (exact in both
       // engines — an approx-median would be engine-specific arithmetic)
@@ -337,147 +482,7 @@ object Round12Queries {
           ((col("n_q") + 1).cast("double") / (col("tq") + 10)).as("q"))
         .agg(floorRound(sum((col("p") - col("q")) *
           log(col("p") / col("q"))), 6).as("psi"))
-    }),
-
-    // R7 — TWO-PROPORTION Z-TEST (A/B readout): assignment by user-id
-    // parity (the deterministic split stand-in), conversion = user made
-    // ≥15 purchases (every fixture user purchases at least once, so a
-    // has-any-purchase metric saturates at p=1 and the pooled variance
-    // degenerates — the ≥15 cut sits at the distribution's median and
-    // discriminates at every SF); pooled-variance z with a zero-variance
-    // guard (z := 0 when p(1−p)=0: saturated metric carries no
-    // evidence). Two user-keyed aggregations; the statistic is one-row
-    // math. floorRound(4) on the two rates and z.
-    "q_ab_ztest" -> ((s, d) => {
-      val users = Tables.events(s, d)
-        .groupBy(col("user_id"))
-        .agg(when(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          >= 15, 1L).otherwise(0L).as("converted"))
-        .select((col("user_id") % 2 === 0).as("grp_a"), col("converted"))
-      val g = users.agg(
-        sum(when(col("grp_a"), 1L).otherwise(0L)).as("n_a"),
-        sum(when(col("grp_a"), col("converted")).otherwise(0L)).as("c_a"),
-        sum(when(!col("grp_a"), 1L).otherwise(0L)).as("n_b"),
-        sum(when(!col("grp_a"), col("converted")).otherwise(0L)).as("c_b"))
-      val p = (col("c_a") + col("c_b")).cast("double") / (col("n_a") + col("n_b"))
-      val variance = p * (lit(1.0) - p) *
-        (lit(1.0) / col("n_a") + lit(1.0) / col("n_b"))
-      g.select(
-        col("n_a"), col("c_a"), col("n_b"), col("c_b"),
-        floorRound(col("c_a").cast("double") / col("n_a"), 4).as("rate_a"),
-        floorRound(col("c_b").cast("double") / col("n_b"), 4).as("rate_b"),
-        floorRound(
-          when(variance > 0,
-            (col("c_a").cast("double") / col("n_a") -
-              col("c_b").cast("double") / col("n_b")) / sqrt(variance))
-            .otherwise(lit(0.0)), 4).as("z"))
-    }),
-
-    // R19 — MATRYOSHKA (nested-embedding) RETRIEVAL AUDIT: serve-time
-    // dimension truncation — rank by the first 16 (and 32) of 64 dims
-    // and price what the cheap prefix costs in exact-top-10 overlap.
-    // The production lever: a 4× narrower scan for candidate gen, full
-    // dims only for re-rank (the v_ivfpq_rerank shape, with prefix dims
-    // playing the codes). Integer-unit L2 end-to-end ⇒ the oracle
-    // replays all three rankings exactly. Scale shape: three per-row
-    // fold passes against one broadcast probe + TakeOrderedAndProject —
-    // no corpus shuffle, no join.
-    "v_matryoshka_probe" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        .filter(size(col("v")) === 64)
-      val probe = e.filter(col("vec_id") === 0).select(col("v").as("pv"))
-      def d2u(dims: Int): org.apache.spark.sql.Column = expr(
-        s"""CAST(floor(aggregate(
-             zip_with(slice(v, 1, $dims), slice(pv, 1, $dims),
-                      (x, y) -> (x - y) * (x - y)),
-             CAST(0.0 AS DOUBLE), (a, b) -> a + b) * 10000 + 0.5) AS BIGINT)""")
-      val scored = e.filter(col("vec_id") =!= 0).crossJoin(broadcast(probe))
-        .select(col("vec_id"), d2u(64).as("d64"), d2u(32).as("d32"),
-          d2u(16).as("d16"))
-        // slim (vec_id, 3×BIGINT) rows read by FIVE consumers (three
-        // top-10s, two of them twice) — without the cut the embeddings
-        // scan + three distance folds execute per consumer (review r20)
-        .transform(Lineage.cut(_))
-      def top10(c: String) = scored.orderBy(col(c), col("vec_id")).limit(10)
-        .select(col("vec_id"))
-      top10("d64").agg(sum(col("vec_id")).as("full_top10_idsum"))
-        .crossJoin(top10("d64").join(top10("d32"), "vec_id")
-          .agg(count(lit(1)).as("n_overlap_32")))
-        .crossJoin(top10("d64").join(top10("d16"), "vec_id")
-          .agg(count(lit(1)).as("n_overlap_16")))
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-
-    "q_hash_split" ->
-      """WITH a AS (
-           SELECT doc_id,
-                  CASE WHEN ((doc_id % 2147483648) * 1103515245 + 12345)
-                         % 2147483648 % 100 < 80 THEN 'train'
-                       WHEN ((doc_id % 2147483648) * 1103515245 + 12345)
-                         % 2147483648 % 100 < 90 THEN 'val'
-                       ELSE 'test' END AS split,
-                  md5(text) AS h
-           FROM documents),
-         th AS (SELECT DISTINCT h FROM a WHERE split = 'train'),
-         lk AS (
-           SELECT split, CAST(count(*) AS BIGINT) AS n_leaked
-           FROM a WHERE split <> 'train' AND h IN (SELECT h FROM th)
-           GROUP BY split),
-         tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM documents),
-         cnt AS (SELECT split, CAST(count(*) AS BIGINT) AS n_docs
-                 FROM a GROUP BY split)
-         SELECT c.split, c.n_docs,
-                floor(CAST(c.n_docs AS DOUBLE) / tot.n_total
-                      * 10000 + 0.5) / 10000 AS pct,
-                coalesce(lk.n_leaked, 0) AS n_leaked_from_train
-         FROM cnt c CROSS JOIN tot
-         LEFT JOIN lk ON lk.split = c.split
-         ORDER BY c.split""",
-
-    "t_mix_weights" ->
-      """WITH bysrc AS (
-           SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-                  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-           FROM documents GROUP BY source),
-         z AS (SELECT sum(pow(CAST(n_tokens AS DOUBLE), 0.7)) AS z FROM bysrc),
-         w AS (
-           SELECT source, n_docs, n_tokens,
-                  CAST(floor(pow(CAST(n_tokens AS DOUBLE), 0.7) / z
-                             * 1000000 + 0.5) AS BIGINT) AS wu
-           FROM bysrc, z)
-         SELECT source, n_docs, n_tokens,
-                floor(CAST(wu AS DOUBLE) / 1000000 * 10000 + 0.5) / 10000
-                  AS weight,
-                wu AS exp_tokens_1m,
-                floor(CAST(wu AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-                      * 10000 + 0.5) / 10000 AS epochs
-         FROM w ORDER BY source""",
-
-    "t_chunk_windows" ->
-      s"""WITH t AS (
-           SELECT doc_id,
-                  CAST(len(string_split(text, ' ')) AS INT) AS n_tokens
-           FROM documents),
-         n AS (
-           SELECT doc_id, n_tokens,
-                  1 + CAST(ceil(CAST(greatest(n_tokens - $ChunkWindow, 0)
-                                     AS DOUBLE) / $ChunkStride) AS INT)
-                    AS n_chunks
-           FROM t)
-         SELECT doc_id, CAST(u.i AS INT) AS chunk_idx,
-                CAST(u.i * $ChunkStride AS INT) AS tok_start,
-                CAST(least(u.i * $ChunkStride + $ChunkWindow, n_tokens)
-                     AS INT) AS tok_end,
-                CAST(least(u.i * $ChunkStride + $ChunkWindow, n_tokens)
-                     - u.i * $ChunkStride AS INT) AS n_chunk_tokens
-         FROM n, LATERAL (SELECT unnest(range(n.n_chunks)) AS i) u
-         ORDER BY doc_id, chunk_idx""",
-
-    "q_psi_drift" ->
+    },
       """WITH b AS (
            SELECT floor((min(event_id) + max(event_id)) / 2) AS mid,
                   min(value) AS lo, max(value) AS hi
@@ -510,9 +515,41 @@ object Round12Queries {
            FROM c, t)
          SELECT floor(sum((p - q) * ln(p / q)) * 1000000 + 0.5) / 1000000
            AS psi
-         FROM pq""",
+         FROM pq"""),
 
-    "q_ab_ztest" ->
+    // R7 — TWO-PROPORTION Z-TEST (A/B readout): assignment by user-id
+    // parity (the deterministic split stand-in), conversion = user made
+    // ≥15 purchases (every fixture user purchases at least once, so a
+    // has-any-purchase metric saturates at p=1 and the pooled variance
+    // degenerates — the ≥15 cut sits at the distribution's median and
+    // discriminates at every SF); pooled-variance z with a zero-variance
+    // guard (z := 0 when p(1−p)=0: saturated metric carries no
+    // evidence). Two user-keyed aggregations; the statistic is one-row
+    // math. floorRound(4) on the two rates and z.
+    QueryDef("q_ab_ztest", (s, d) => {
+      val users = Tables.events(s, d)
+        .groupBy(col("user_id"))
+        .agg(when(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
+          >= 15, 1L).otherwise(0L).as("converted"))
+        .select((col("user_id") % 2 === 0).as("grp_a"), col("converted"))
+      val g = users.agg(
+        sum(when(col("grp_a"), 1L).otherwise(0L)).as("n_a"),
+        sum(when(col("grp_a"), col("converted")).otherwise(0L)).as("c_a"),
+        sum(when(!col("grp_a"), 1L).otherwise(0L)).as("n_b"),
+        sum(when(!col("grp_a"), col("converted")).otherwise(0L)).as("c_b"))
+      val p = (col("c_a") + col("c_b")).cast("double") / (col("n_a") + col("n_b"))
+      val variance = p * (lit(1.0) - p) *
+        (lit(1.0) / col("n_a") + lit(1.0) / col("n_b"))
+      g.select(
+        col("n_a"), col("c_a"), col("n_b"), col("c_b"),
+        floorRound(col("c_a").cast("double") / col("n_a"), 4).as("rate_a"),
+        floorRound(col("c_b").cast("double") / col("n_b"), 4).as("rate_b"),
+        floorRound(
+          when(variance > 0,
+            (col("c_a").cast("double") / col("n_a") -
+              col("c_b").cast("double") / col("n_b")) / sqrt(variance))
+            .otherwise(lit(0.0)), 4).as("z"))
+    },
       """WITH u AS (
            SELECT user_id % 2 = 0 AS grp_a,
                   CASE WHEN sum(CASE WHEN event_type = 'purchase'
@@ -542,103 +579,43 @@ object Round12Queries {
                       THEN (CAST(c_a AS DOUBLE) / n_a - CAST(c_b AS DOUBLE) / n_b)
                            / sqrt(variance)
                       ELSE 0.0 END * 10000 + 0.5) / 10000 AS z
-         FROM v""",
+         FROM v"""),
 
-    "t_curriculum_bins" ->
-      """WITH t AS (
-           SELECT doc_id,
-                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-                  CAST(len(string_split(text, ' ')) AS DOUBLE) AS n_tok,
-                  CAST(len(list_filter(string_split(text, ' '),
-                        x -> x IN ('the', 'a'))) AS DOUBLE) AS stop_hits,
-                  CAST(len(text) - (len(string_split(text, ' ')) - 1) AS DOUBLE)
-                    / len(string_split(text, ' ')) AS avg_len,
-                  CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-                    / len(string_split(text, ' ')) AS diversity
-           FROM documents),
-         s AS (
-           SELECT doc_id, n_tokens,
-                  floor((0.5 * diversity + 0.3 * (1.0 - stop_hits / n_tok)
-                         + 0.2 * least(avg_len / 10.0, 1.0))
-                        * 10000 + 0.5) / 10000 AS q
-           FROM t),
-         c AS (SELECT quantile_cont(q, [0.25, 0.5, 0.75]) AS c FROM s),
-         st AS (
-           SELECT s.n_tokens, s.q,
-                  1 + CASE WHEN s.q > floor(c.c[1] * 10000 + 0.5) / 10000
-                           THEN 1 ELSE 0 END
-                    + CASE WHEN s.q > floor(c.c[2] * 10000 + 0.5) / 10000
-                           THEN 1 ELSE 0 END
-                    + CASE WHEN s.q > floor(c.c[3] * 10000 + 0.5) / 10000
-                           THEN 1 ELSE 0 END AS stage
-           FROM s, c)
-         SELECT stage, CAST(count(*) AS BIGINT) AS n_docs,
-                CAST(sum(n_tokens) AS BIGINT) AS token_budget,
-                floor(avg(q) * 10000 + 0.5) / 10000 AS avg_quality
-         FROM st GROUP BY stage ORDER BY stage""",
-
-    "t_oov_rate" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-           FROM documents),
-         vocab AS (
-           SELECT tok FROM (
-             SELECT tok, count(*) AS n FROM toks GROUP BY tok
-             ORDER BY n DESC, tok LIMIT 100)),
-         oov AS (
-           SELECT doc_id, CAST(count(*) AS BIGINT) AS n_oov
-           FROM toks WHERE tok NOT IN (SELECT tok FROM vocab)
-           GROUP BY doc_id),
-         base AS (
-           SELECT doc_id,
-                  CAST(len(string_split(text, ' ')) AS INT) AS n_tokens
-           FROM documents)
-         SELECT b.doc_id, b.n_tokens,
-                coalesce(o.n_oov, 0) AS n_oov,
-                floor(coalesce(o.n_oov, 0) / CAST(b.n_tokens AS DOUBLE)
-                      * 10000 + 0.5) / 10000 AS oov_rate
-         FROM base b LEFT JOIN oov o ON o.doc_id = b.doc_id
-         ORDER BY b.doc_id""",
-
-    "q_k_anonymity" ->
-      """WITH g AS (
-           SELECT event_type, CAST(ts AS DATE) AS day,
-                  CAST(count(*) AS BIGINT) AS n
-           FROM events GROUP BY 1, 2)
-         SELECT CAST(count(*) AS BIGINT) AS n_groups,
-                CAST(sum(CASE WHEN n < 5 THEN 1 ELSE 0 END) AS BIGINT)
-                  AS n_violating,
-                CAST(sum(CASE WHEN n < 5 THEN n ELSE 0 END) AS BIGINT)
-                  AS n_records_at_risk,
-                floor(sum(CASE WHEN n < 5 THEN n ELSE 0 END)
-                      / CAST(sum(n) AS DOUBLE) * 1000000 + 0.5) / 1000000
-                  AS suppression_frac,
-                sum(CASE WHEN n < 5 THEN 1 ELSE 0 END) = 0 AS k_anonymous
-         FROM g""",
-
-    "v_maxsim_probe" ->
-      """WITH ex AS (
-           SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS e,
-                  generate_subscripts(embedding, 1) AS i
-           FROM embeddings WHERE len(embedding) = 64),
-         sub AS (
-           SELECT vec_id, CAST((i - 1) // 8 AS INT) AS ss, (i - 1) % 8 AS k, e
-           FROM ex),
-         q AS (SELECT ss AS qi, k, e FROM sub WHERE vec_id = 0),
-         dots AS (
-           SELECT s.vec_id, q.qi, s.ss AS dj,
-                  CAST(floor(sum(q.e * s.e) * 10000 + 0.5) AS BIGINT) AS d
-           FROM sub s JOIN q ON q.k = s.k
-           WHERE s.vec_id <> 0
-           GROUP BY 1, 2, 3),
-         mx AS (SELECT vec_id, qi, max(d) AS m FROM dots GROUP BY 1, 2),
-         score AS (
-           SELECT vec_id, CAST(sum(m) AS BIGINT) AS maxsim_units
-           FROM mx GROUP BY 1)
-         SELECT vec_id, maxsim_units FROM score
-         ORDER BY maxsim_units DESC, vec_id LIMIT 10""",
-
-    "v_matryoshka_probe" ->
+    // R19 — MATRYOSHKA (nested-embedding) RETRIEVAL AUDIT: serve-time
+    // dimension truncation — rank by the first 16 (and 32) of 64 dims
+    // and price what the cheap prefix costs in exact-top-10 overlap.
+    // The production lever: a 4× narrower scan for candidate gen, full
+    // dims only for re-rank (the v_ivfpq_rerank shape, with prefix dims
+    // playing the codes). Integer-unit L2 end-to-end ⇒ the oracle
+    // replays all three rankings exactly. Scale shape: three per-row
+    // fold passes against one broadcast probe + TakeOrderedAndProject —
+    // no corpus shuffle, no join.
+    QueryDef("v_matryoshka_probe", (s, d) => {
+      val e = Tables.embeddings(s, d)
+        .select(col("vec_id"),
+          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+        .filter(size(col("v")) === 64)
+      val probe = e.filter(col("vec_id") === 0).select(col("v").as("pv"))
+      def d2u(dims: Int): org.apache.spark.sql.Column = expr(
+        s"""CAST(floor(aggregate(
+             zip_with(slice(v, 1, $dims), slice(pv, 1, $dims),
+                      (x, y) -> (x - y) * (x - y)),
+             CAST(0.0 AS DOUBLE), (a, b) -> a + b) * 10000 + 0.5) AS BIGINT)""")
+      val scored = e.filter(col("vec_id") =!= 0).crossJoin(broadcast(probe))
+        .select(col("vec_id"), d2u(64).as("d64"), d2u(32).as("d32"),
+          d2u(16).as("d16"))
+        // slim (vec_id, 3×BIGINT) rows read by FIVE consumers (three
+        // top-10s, two of them twice) — without the cut the embeddings
+        // scan + three distance folds execute per consumer (review r20)
+        .transform(Lineage.cut(_))
+      def top10(c: String) = scored.orderBy(col(c), col("vec_id")).limit(10)
+        .select(col("vec_id"))
+      top10("d64").agg(sum(col("vec_id")).as("full_top10_idsum"))
+        .crossJoin(top10("d64").join(top10("d32"), "vec_id")
+          .agg(count(lit(1)).as("n_overlap_32")))
+        .crossJoin(top10("d64").join(top10("d16"), "vec_id")
+          .agg(count(lit(1)).as("n_overlap_16")))
+    },
       """WITH ex AS (
            SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS e,
                   generate_subscripts(embedding, 1) AS i
@@ -665,6 +642,6 @@ object Round12Queries {
            (SELECT CAST(count(*) AS BIGINT)
             FROM t64 JOIN t32 USING (vec_id)) AS n_overlap_32,
            (SELECT CAST(count(*) AS BIGINT)
-            FROM t64 JOIN t16 USING (vec_id)) AS n_overlap_16"""
+            FROM t64 JOIN t16 USING (vec_id)) AS n_overlap_16""")
   )
 }

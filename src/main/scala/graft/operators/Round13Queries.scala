@@ -56,7 +56,7 @@ object Round13Queries {
     (nEmail, nPhone, nId, t3)
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[QueryDef] = Seq(
 
     // R20/R22 — STRUCTURED PII DETECT + REDACT. The base fixture corpus is
     // digit-free (no real PII, by construction; the derived sf1 perf corpus
@@ -70,7 +70,7 @@ object Round13Queries {
     // counts and the scrubbed-text md5 exercise every class at every SF.
     // Output: per-doc hit count per class + total + md5 of the scrubbed
     // text (byte-identical-scrub proof).
-    "t_pii_redact" -> ((s, d) => {
+    QueryDef("t_pii_redact", (s, d) => {
       val banner = when(col("doc_id") % 4 === 0,
           concat(lit(" contact user"), col("doc_id").cast("string"),
             lit("@example.com now")))
@@ -90,39 +90,11 @@ object Round13Queries {
           (col("n_email") + col("n_phone") + col("n_id")).as("n_pii"),
           md5(col("t3")).as("redacted_md5"))
         .orderBy("doc_id")
-    }),
-
-    // R19 — IVF INDEX CELL-SKEW AUDIT: assign every vector its home cell
-    // exactly as the serve path does (per-row argmax against the broadcast
-    // stride-13 coarse quantizer — byte-identical machinery to
-    // v_ivfpq_search's assignment stage), census the cells, and price the
-    // skew: max cell size over exact median (carried as med2 = the sum of
-    // the two middle order statistics, an exact BIGINT — no float
-    // interpolation) with the rebalance flag at ratio ≥ 4. Scale shape:
-    // one per-row assignment pass (no shuffle), one k-row keyed count,
-    // then everything is index-sized — the census a monitor runs nightly
-    // over a 100 TB corpus costs one codes-table scan, nothing more.
-    "v_ivf_cell_skew" -> ((s, d) => {
-      graft.plans.GraftFunctions.register(s)
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"),
-          graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
-        .filter(size(col("v")) === 64)
-        .withColumn("nrm", graft.functions.VectorFunctions.l2Norm(col("v")))
-      val (centArr, _) = SimilarityQueries.pqIndexBuild(e)
-      val counts = e.crossJoin(broadcast(centArr))
-        .select(expr("graft_pick_cell(v, nrm, cells).cell").as("cell"))
-        .groupBy(col("cell")).agg(count(lit(1)).as("n_vecs"))
-      SimilarityQueries.cellSkewCensus(counts)
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-
-    // DuckDB twin: same banner, same staged class order; DuckDB's
-    // regexp_replace needs the explicit 'g' flag (Spark replaces all
-    // matches by default).
-    "t_pii_redact" -> {
+    },
+      // DuckDB twin: same banner, same staged class order; DuckDB's
+      // regexp_replace needs the explicit 'g' flag (Spark replaces all
+      // matches by default).
+    {
       val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
       val phone = "\\b\\d{3}-\\d{4}\\b"
       val id = "\\b\\d{9}\\b"
@@ -155,12 +127,34 @@ object Round13Queries {
                 n_email + n_phone + n_id AS n_pii,
                 md5(t3) AS redacted_md5
          FROM s3 ORDER BY doc_id"""
-    },
+    }),
 
-    // replays the home-cell assignment (stride-13 centroids, 4-dp-floored
-    // cosine, c DESC / cell ASC argmax — the v_ivfpq_search CTEs), the
-    // per-cell census, and the integer median/skew arithmetic exactly
-    "v_ivf_cell_skew" ->
+    // R19 — IVF INDEX CELL-SKEW AUDIT: assign every vector its home cell
+    // exactly as the serve path does (per-row argmax against the broadcast
+    // stride-13 coarse quantizer — byte-identical machinery to
+    // v_ivfpq_search's assignment stage), census the cells, and price the
+    // skew: max cell size over exact median (carried as med2 = the sum of
+    // the two middle order statistics, an exact BIGINT — no float
+    // interpolation) with the rebalance flag at ratio ≥ 4. Scale shape:
+    // one per-row assignment pass (no shuffle), one k-row keyed count,
+    // then everything is index-sized — the census a monitor runs nightly
+    // over a 100 TB corpus costs one codes-table scan, nothing more.
+    QueryDef("v_ivf_cell_skew", (s, d) => {
+      graft.plans.GraftFunctions.register(s)
+      val e = Tables.embeddings(s, d)
+        .select(col("vec_id"),
+          graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
+        .filter(size(col("v")) === 64)
+        .withColumn("nrm", graft.functions.VectorFunctions.l2Norm(col("v")))
+      val (centArr, _) = SimilarityQueries.pqIndexBuild(e)
+      val counts = e.crossJoin(broadcast(centArr))
+        .select(expr("graft_pick_cell(v, nrm, cells).cell").as("cell"))
+        .groupBy(col("cell")).agg(count(lit(1)).as("n_vecs"))
+      SimilarityQueries.cellSkewCensus(counts)
+    },
+      // replays the home-cell assignment (stride-13 centroids, 4-dp-floored
+      // cosine, c DESC / cell ASC argmax — the v_ivfpq_search CTEs), the
+      // per-cell census, and the integer median/skew arithmetic exactly
       """WITH ex AS (
            SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS e,
                   generate_subscripts(embedding, 1) AS i
@@ -203,6 +197,6 @@ object Round13Queries {
                 floor(a.max_n * 2.0 / a.med2 * 10000 + 0.5) / 10000 AS skew_ratio,
                 (a.max_n * 2 >= a.med2 * 4) AS rebalance
          FROM ranked r CROSS JOIN audit a
-         ORDER BY r.cell"""
+         ORDER BY r.cell""")
   )
 }

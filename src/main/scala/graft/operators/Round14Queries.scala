@@ -38,73 +38,6 @@ object Round14Queries {
     */
   private[graft] val LmHighNllUnits = 34300L
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // R20 — HELD-OUT BIGRAM LM SCORING. Train half: even doc_id; score
-    // half: odd. Model: P(w2|w1) = (c2(w1,w2)+1) / (c1(w1)+V) with
-    // c1(w1) = Σ_w2 c2(w1,w2) (bigram-context count, so the conditional
-    // sums to 1) and V = |distinct train tokens|; an unseen context
-    // degrades to the uniform 1/V floor. Per-bigram −ln p is floored to
-    // integer 1e-4 units BEFORE summing (order-independent integer sum —
-    // the t_perplexity_proxy parity trick), the per-doc mean is an exact
-    // integer division, and the high-ppl flag is an integer compare.
-    // Scale shape: bigram extraction is a pure per-row transform+explode
-    // (no self-join); the model tables are vocab-sized and deliberately
-    // NOT broadcast-hinted (vocabulary grows with the corpus — the scored
-    // probe joins shuffle on the bigram/context key, AQE may still pick
-    // broadcast when the model fits); one 1-row V aggregate broadcasts.
-    "t_lm_score" -> ((s, d) =>
-      lmScore(Tables.documents(s, d).filter(col("doc_id") % 2 === 0),
-        Tables.documents(s, d).filter(col("doc_id") % 2 === 1))),
-
-    // R17/R6 — CORPUS SNAPSHOT DIFF: the release-over-release audit.
-    // Snapshot A ("previous release") and B ("candidate") are derived
-    // deterministically from the fixture so both engines construct
-    // identical inputs: A = docs with doc_id % 5 != 4, all carrying their
-    // ORIGINAL text (including the % 11 == 0 docs — the edit exists only
-    // in B); B = every doc, with " revised" appended when
-    // doc_id % 11 == 0, so % 11 == 0 docs present in A diff as
-    // "changed" and the % 5 == 4 docs as "added". Diff by doc_id
-    // (presence) then by md5 (content): status ∈ added / changed /
-    // unchanged (removed cannot occur in this fixture shape — A ⊆ B by
-    // id — but the expression handles it; the spec plants one). Output:
-    // per-doc status + per-status counts. Scale shape: one full outer
-    // join keyed on doc_id with 16-byte hashes as the only payload —
-    // the exact-dedup discipline applied across releases; at 100 TB
-    // both sides are sha-bucketed scans, nothing text-sized shuffles
-    // after the hash projection.
-    "d_snapshot_diff" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      snapshotDiff(
-        docs.filter(col("doc_id") % 5 =!= 4),
-        docs.select(col("doc_id"),
-          when(col("doc_id") % 11 === 0, concat(col("text"), lit(" revised")))
-            .otherwise(col("text")).as("text")))
-    }),
-
-    // R19 — EMBEDDING-SPACE DRIFT MONITOR: reference = even vec_id,
-    // current = odd (the q_psi_drift split discipline applied to the
-    // vector family). Per-dim means are quantized to integer 1e-6 units
-    // FIRST (one floor at the aggregate edge — everything downstream is
-    // exact integer math both engines replay bit-for-bit): centroid
-    // cosine from integer dots, mean-shift L2 in 1e-6 units; per-row
-    // norms are quantized to 1e-4 units before the integer sum, so the
-    // per-half average norm is an exact integer division. One output
-    // row; `drifted` alarms on centroid cosine under the dial. Scale
-    // shape: one (half, pos) keyed aggregate (128 rows) + one per-row
-    // norm pass — nothing corpus-sized shuffles beyond the two partial
-    // aggregates; the monitor a nightly embedding pipeline runs at any
-    // corpus size.
-    "v_embedding_drift" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"),
-          graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
-        .filter(size(col("v")) === 64)
-      embeddingDrift(e.filter(col("vec_id") % 2 === 0),
-        e.filter(col("vec_id") % 2 === 1))
-    })
-  )
-
   /** Held-out bigram-LM scoring core (see the `t_lm_score` def for the
     * model and parity discipline). `train` and `scored` carry
     * (doc_id, text); docs with fewer than two tokens score no bigrams and
@@ -217,11 +150,26 @@ object Round14Queries {
       .orderBy("doc_id")
   }
 
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[QueryDef] = Seq(
 
-    // replays the split, the bigram/context counts, the add-one smoothing
-    // and the integer-unit NLL fold exactly
-    "t_lm_score" ->
+    // R20 — HELD-OUT BIGRAM LM SCORING. Train half: even doc_id; score
+    // half: odd. Model: P(w2|w1) = (c2(w1,w2)+1) / (c1(w1)+V) with
+    // c1(w1) = Σ_w2 c2(w1,w2) (bigram-context count, so the conditional
+    // sums to 1) and V = |distinct train tokens|; an unseen context
+    // degrades to the uniform 1/V floor. Per-bigram −ln p is floored to
+    // integer 1e-4 units BEFORE summing (order-independent integer sum —
+    // the t_perplexity_proxy parity trick), the per-doc mean is an exact
+    // integer division, and the high-ppl flag is an integer compare.
+    // Scale shape: bigram extraction is a pure per-row transform+explode
+    // (no self-join); the model tables are vocab-sized and deliberately
+    // NOT broadcast-hinted (vocabulary grows with the corpus — the scored
+    // probe joins shuffle on the bigram/context key, AQE may still pick
+    // broadcast when the model fits); one 1-row V aggregate broadcasts.
+    QueryDef("t_lm_score", (s, d) =>
+      lmScore(Tables.documents(s, d).filter(col("doc_id") % 2 === 0),
+        Tables.documents(s, d).filter(col("doc_id") % 2 === 1)),
+      // replays the split, the bigram/context counts, the add-one smoothing
+      // and the integer-unit NLL fold exactly
       s"""WITH tk AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS w,
                   generate_subscripts(string_split(text, ' '), 1) AS i
@@ -249,12 +197,79 @@ object Round14Queries {
                 CAST(sum(u) AS BIGINT) AS nll_units,
                 CAST(sum(u) // count(*) AS BIGINT) AS nll_avg_units,
                 (sum(u) // count(*)) > $LmHighNllUnits AS high_ppl
-         FROM u GROUP BY doc_id ORDER BY doc_id""",
+         FROM u GROUP BY doc_id ORDER BY doc_id"""),
 
-    // replays the half split, the 1e-6-unit per-dim means, the integer
-    // centroid cosine / mean-shift arithmetic, and the 1e-4-unit norm
-    // averages exactly
-    "v_embedding_drift" ->
+    // R17/R6 — CORPUS SNAPSHOT DIFF: the release-over-release audit.
+    // Snapshot A ("previous release") and B ("candidate") are derived
+    // deterministically from the fixture so both engines construct
+    // identical inputs: A = docs with doc_id % 5 != 4, all carrying their
+    // ORIGINAL text (including the % 11 == 0 docs — the edit exists only
+    // in B); B = every doc, with " revised" appended when
+    // doc_id % 11 == 0, so % 11 == 0 docs present in A diff as
+    // "changed" and the % 5 == 4 docs as "added". Diff by doc_id
+    // (presence) then by md5 (content): status ∈ added / changed /
+    // unchanged (removed cannot occur in this fixture shape — A ⊆ B by
+    // id — but the expression handles it; the spec plants one). Output:
+    // per-doc status + per-status counts. Scale shape: one full outer
+    // join keyed on doc_id with 16-byte hashes as the only payload —
+    // the exact-dedup discipline applied across releases; at 100 TB
+    // both sides are sha-bucketed scans, nothing text-sized shuffles
+    // after the hash projection.
+    QueryDef("d_snapshot_diff", (s, d) => {
+      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+      snapshotDiff(
+        docs.filter(col("doc_id") % 5 =!= 4),
+        docs.select(col("doc_id"),
+          when(col("doc_id") % 11 === 0, concat(col("text"), lit(" revised")))
+            .otherwise(col("text")).as("text")))
+    },
+      // replays the derived snapshots, the full-outer id join, the sha
+      // compare and the status census exactly
+      """WITH a AS (
+           SELECT doc_id, md5(text) AS sha_a
+           FROM documents WHERE doc_id % 5 != 4),
+         b AS (
+           SELECT doc_id,
+                  md5(CASE WHEN doc_id % 11 = 0 THEN text || ' revised'
+                           ELSE text END) AS sha_b
+           FROM documents),
+         j AS (
+           SELECT coalesce(a.doc_id, b.doc_id) AS doc_id,
+                  CASE WHEN a.sha_a IS NULL THEN 'added'
+                       WHEN b.sha_b IS NULL THEN 'removed'
+                       WHEN a.sha_a != b.sha_b THEN 'changed'
+                       ELSE 'unchanged' END AS status
+           FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id),
+         c AS (SELECT status, CAST(count(*) AS BIGINT) AS n_status
+               FROM j GROUP BY status)
+         SELECT j.doc_id, j.status, c.n_status
+         FROM j JOIN c ON c.status = j.status
+         ORDER BY j.doc_id"""),
+
+    // R19 — EMBEDDING-SPACE DRIFT MONITOR: reference = even vec_id,
+    // current = odd (the q_psi_drift split discipline applied to the
+    // vector family). Per-dim means are quantized to integer 1e-6 units
+    // FIRST (one floor at the aggregate edge — everything downstream is
+    // exact integer math both engines replay bit-for-bit): centroid
+    // cosine from integer dots, mean-shift L2 in 1e-6 units; per-row
+    // norms are quantized to 1e-4 units before the integer sum, so the
+    // per-half average norm is an exact integer division. One output
+    // row; `drifted` alarms on centroid cosine under the dial. Scale
+    // shape: one (half, pos) keyed aggregate (128 rows) + one per-row
+    // norm pass — nothing corpus-sized shuffles beyond the two partial
+    // aggregates; the monitor a nightly embedding pipeline runs at any
+    // corpus size.
+    QueryDef("v_embedding_drift", (s, d) => {
+      val e = Tables.embeddings(s, d)
+        .select(col("vec_id"),
+          graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
+        .filter(size(col("v")) === 64)
+      embeddingDrift(e.filter(col("vec_id") % 2 === 0),
+        e.filter(col("vec_id") % 2 === 1))
+    },
+      // replays the half split, the 1e-6-unit per-dim means, the integer
+      // centroid cosine / mean-shift arithmetic, and the 1e-4-unit norm
+      // averages exactly
       s"""WITH ex AS (
            SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS e,
                   generate_subscripts(embedding, 1) AS i
@@ -298,30 +313,6 @@ object Round14Queries {
                     sqrt(1.0 / r.n + 1.0 / c.n) * 1000000 + 0.5) AS BIGINT)
                   AS drifted
          FROM st, (SELECT * FROM ns WHERE half = 0) r,
-              (SELECT * FROM ns WHERE half = 1) c""",
-
-    // replays the derived snapshots, the full-outer id join, the sha
-    // compare and the status census exactly
-    "d_snapshot_diff" ->
-      """WITH a AS (
-           SELECT doc_id, md5(text) AS sha_a
-           FROM documents WHERE doc_id % 5 != 4),
-         b AS (
-           SELECT doc_id,
-                  md5(CASE WHEN doc_id % 11 = 0 THEN text || ' revised'
-                           ELSE text END) AS sha_b
-           FROM documents),
-         j AS (
-           SELECT coalesce(a.doc_id, b.doc_id) AS doc_id,
-                  CASE WHEN a.sha_a IS NULL THEN 'added'
-                       WHEN b.sha_b IS NULL THEN 'removed'
-                       WHEN a.sha_a != b.sha_b THEN 'changed'
-                       ELSE 'unchanged' END AS status
-           FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id),
-         c AS (SELECT status, CAST(count(*) AS BIGINT) AS n_status
-               FROM j GROUP BY status)
-         SELECT j.doc_id, j.status, c.n_status
-         FROM j JOIN c ON c.status = j.status
-         ORDER BY j.doc_id"""
+              (SELECT * FROM ns WHERE half = 1) c""")
   )
 }

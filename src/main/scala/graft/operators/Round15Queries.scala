@@ -52,61 +52,6 @@ object Round15Queries {
     */
   private[graft] val MaxDocsPerLine = 2L
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // R17/R20 — LINE-LEVEL BOILERPLATE DEDUP. Scale shape: line
-    // formation is a pure per-row transform (slice over the token array —
-    // no shuffle, no self-join); the corpus-frequency table keys every
-    // shuffle on xxhash64(line) (8-byte keys — line TEXT never shuffles
-    // on the frequency side; the 2⁻⁶⁴ collision caveat is the exact-dedup
-    // family's documented trade), first (lh, doc_id)-distinct for the
-    // map-side-combinable per-doc dedup, then an lh-keyed count whose
-    // exchange the verdict join reuses. The frequency side is
-    // deliberately NOT broadcast-hinted: the distinct-line table grows
-    // with the corpus (the t_lm_score vocab discipline — AQE may still
-    // pick broadcast when it fits). Reconstruction is one doc_id-keyed
-    // aggregate; per-doc line counts are bounded by doc length, so the
-    // collect_list is row-sized, never corpus-sized.
-    "d_line_dedup" -> ((s, d) =>
-      lineDedup(Tables.documents(s, d).select(col("doc_id"), col("text")))),
-
-    // R17/R20 — the NEWLINE segmentation mode of the line dedup, oracled
-    // end-to-end (VERDICT r16 #6: the mode must be an executable path,
-    // not prose): the fixture's single-line docs are given real newlines
-    // by a deterministic rewrite (a '\n' after every 4th token — the same
-    // transformation on both sides), then deduped with
-    // `lineDedup(newlineSplit = true)`. Scale shape identical to
-    // d_line_dedup: the rewrite is per-row narrow work, everything
-    // downstream keys on the 8-byte line hash.
-    "d_line_dedup_nl" -> ((s, d) =>
-      lineDedup(
-        Tables.documents(s, d).select(col("doc_id"),
-          regexp_replace(col("text"), "(\\S+ \\S+ \\S+ \\S+) ", "$1\n")
-            .as("text")),
-        newlineSplit = true)),
-
-    // R19 — IVF RETRAIN LOOP (VERDICT r14 #5): v_ivf_cell_skew monitors,
-    // refinedCentArrK retrains, pqIndexAnnotate re-encodes — this query
-    // composes flag → retrain → re-census into the one-row audit an index
-    // operator acts on: the census globals against the SEED quantizer
-    // (exactly v_ivf_cell_skew's figures), the same globals against the
-    // 2-step-Lloyd retrained quantizer, and the integer `improved`
-    // verdict. Fixed unroll (steps = 2) so the oracle replays the E/M
-    // chain as materialized CTEs (the v_ivfpq_trained discipline). Scale
-    // shape: 2 census passes + 2 Lloyd steps = a bounded number of
-    // per-row argmax scans against broadcast index-sized artifacts;
-    // nothing corpus-sized shuffles except the k-row M-step aggregates.
-    "v_ivf_retrain" -> ((s, d) => {
-      graft.plans.GraftFunctions.register(s)
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"),
-          graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
-        .filter(size(col("v")) === 64)
-        .withColumn("nrm", graft.functions.VectorFunctions.l2Norm(col("v")))
-      ivfRetrainAudit(e)
-    })
-  )
-
   /** Retrained quantizer + RE-ENCODED codes for the tripped-census path
     * (VERDICT r14 #5 — the piece that closes serve → monitor → retrain):
     * the coarse quantizer is Lloyd-refined `steps` E/M rounds from the
@@ -244,13 +189,27 @@ object Round15Queries {
             x => x.getField("line")),
           if (newlineSplit) "\n" else " ").as("kept_text"))
 
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[QueryDef] = Seq(
 
-    // replays the segmentation (1-based subscripts grouped by (i-1)//w ≡
-    // the 0-based slice windows), the distinct-doc frequency, the cut,
-    // and the in-order reconstruction exactly; DuckDB string_agg skips
-    // the CASE's NULLs just as collect_list skips them
-    "d_line_dedup" ->
+    // R17/R20 — LINE-LEVEL BOILERPLATE DEDUP. Scale shape: line
+    // formation is a pure per-row transform (slice over the token array —
+    // no shuffle, no self-join); the corpus-frequency table keys every
+    // shuffle on xxhash64(line) (8-byte keys — line TEXT never shuffles
+    // on the frequency side; the 2⁻⁶⁴ collision caveat is the exact-dedup
+    // family's documented trade), first (lh, doc_id)-distinct for the
+    // map-side-combinable per-doc dedup, then an lh-keyed count whose
+    // exchange the verdict join reuses. The frequency side is
+    // deliberately NOT broadcast-hinted: the distinct-line table grows
+    // with the corpus (the t_lm_score vocab discipline — AQE may still
+    // pick broadcast when it fits). Reconstruction is one doc_id-keyed
+    // aggregate; per-doc line counts are bounded by doc length, so the
+    // collect_list is row-sized, never corpus-sized.
+    QueryDef("d_line_dedup", (s, d) =>
+      lineDedup(Tables.documents(s, d).select(col("doc_id"), col("text"))),
+      // replays the segmentation (1-based subscripts grouped by (i-1)//w ≡
+      // the 0-based slice windows), the distinct-doc frequency, the cut,
+      // and the in-order reconstruction exactly; DuckDB string_agg skips
+      // the CASE's NULLs just as collect_list skips them
       s"""WITH toks AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
                   generate_subscripts(string_split(text, ' '), 1) AS i
@@ -270,14 +229,27 @@ object Round15Queries {
                   CASE WHEN f.ndocs <= $MaxDocsPerLine THEN l.line END,
                   ' ' ORDER BY l.line_no), '') AS kept_text
          FROM lines l JOIN freq f USING (line)
-         GROUP BY l.doc_id ORDER BY l.doc_id""",
+         GROUP BY l.doc_id ORDER BY l.doc_id"""),
 
-    // the newline mode's oracle: same rewrite (RE2 '\1' + chr(10) ≡ Java
-    // '$1\n'; both engines continue past each non-overlapping match), then
-    // chr(10)-split lines with 1-based ordinals (ordering-equivalent to
-    // Spark's 0-based posexplode), the distinct-doc frequency, the cut,
-    // and the chr(10)-joined in-order reconstruction
-    "d_line_dedup_nl" ->
+    // R17/R20 — the NEWLINE segmentation mode of the line dedup, oracled
+    // end-to-end (VERDICT r16 #6: the mode must be an executable path,
+    // not prose): the fixture's single-line docs are given real newlines
+    // by a deterministic rewrite (a '\n' after every 4th token — the same
+    // transformation on both sides), then deduped with
+    // `lineDedup(newlineSplit = true)`. Scale shape identical to
+    // d_line_dedup: the rewrite is per-row narrow work, everything
+    // downstream keys on the 8-byte line hash.
+    QueryDef("d_line_dedup_nl", (s, d) =>
+      lineDedup(
+        Tables.documents(s, d).select(col("doc_id"),
+          regexp_replace(col("text"), "(\\S+ \\S+ \\S+ \\S+) ", "$1\n")
+            .as("text")),
+        newlineSplit = true),
+      // the newline mode's oracle: same rewrite (RE2 '\1' + chr(10) ≡ Java
+      // '$1\n'; both engines continue past each non-overlapping match), then
+      // chr(10)-split lines with 1-based ordinals (ordering-equivalent to
+      // Spark's 0-based posexplode), the distinct-doc frequency, the cut,
+      // and the chr(10)-joined in-order reconstruction
       s"""WITH nl AS (
            SELECT doc_id,
                   regexp_replace(text, '(\\S+ \\S+ \\S+ \\S+) ',
@@ -300,13 +272,32 @@ object Round15Queries {
                   CASE WHEN f.ndocs <= $MaxDocsPerLine THEN l.line END,
                   chr(10) ORDER BY l.line_no), '') AS kept_text
          FROM lines l JOIN freq f USING (line)
-         GROUP BY l.doc_id ORDER BY l.doc_id""",
+         GROUP BY l.doc_id ORDER BY l.doc_id"""),
 
-    // replays the seed home assignment + census (the v_ivf_cell_skew
-    // CTEs), TWO Lloyd E/M steps as a materialized CTE chain (the
-    // v_ivfpq_trained discipline), the re-census against the retrained
-    // centroids, and the integer cross-multiplied improvement predicate
-    "v_ivf_retrain" ->
+    // R19 — IVF RETRAIN LOOP (VERDICT r14 #5): v_ivf_cell_skew monitors,
+    // refinedCentArrK retrains, pqIndexAnnotate re-encodes — this query
+    // composes flag → retrain → re-census into the one-row audit an index
+    // operator acts on: the census globals against the SEED quantizer
+    // (exactly v_ivf_cell_skew's figures), the same globals against the
+    // 2-step-Lloyd retrained quantizer, and the integer `improved`
+    // verdict. Fixed unroll (steps = 2) so the oracle replays the E/M
+    // chain as materialized CTEs (the v_ivfpq_trained discipline). Scale
+    // shape: 2 census passes + 2 Lloyd steps = a bounded number of
+    // per-row argmax scans against broadcast index-sized artifacts;
+    // nothing corpus-sized shuffles except the k-row M-step aggregates.
+    QueryDef("v_ivf_retrain", (s, d) => {
+      graft.plans.GraftFunctions.register(s)
+      val e = Tables.embeddings(s, d)
+        .select(col("vec_id"),
+          graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
+        .filter(size(col("v")) === 64)
+        .withColumn("nrm", graft.functions.VectorFunctions.l2Norm(col("v")))
+      ivfRetrainAudit(e)
+    },
+      // replays the seed home assignment + census (the v_ivf_cell_skew
+      // CTEs), TWO Lloyd E/M steps as a materialized CTE chain (the
+      // v_ivfpq_trained discipline), the re-census against the retrained
+      // centroids, and the integer cross-multiplied improvement predicate
       """WITH ex AS (
            SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS e,
                   generate_subscripts(embedding, 1) AS i
@@ -415,6 +406,6 @@ object Round15Queries {
                 (b.max_n_post * 2 >= b.med2_post * 4) AS rebalance_post,
                 (b.max_n_post * a.med2_pre <= a.max_n_pre * b.med2_post)
                   AS improved
-         FROM audit_pre a CROSS JOIN audit_post b"""
+         FROM audit_pre a CROSS JOIN audit_post b""")
   )
 }

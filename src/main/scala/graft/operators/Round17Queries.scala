@@ -58,28 +58,6 @@ object Round17Queries {
     */
   private[graft] val SpanWindowTokens = 5
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // R20 — DSIR IMPORTANCE WEIGHTS. Scale shape: see [[dsirWeights]].
-    "t_dsir_weights" -> ((s, d) =>
-      dsirWeights(Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), col("text")))),
-
-    // R20 — BM25 TOP-K RETRIEVAL. Scale shape: see [[bm25TopK]].
-    "t_bm25_topk" -> ((s, d) =>
-      bm25TopK(Tables.documents(s, d).select(col("doc_id"), col("text")))),
-
-    // R20 — SPAN-LEVEL LANGUAGE SEGMENTATION. Scale shape: window
-    // formation is the shared per-row narrow slice ([[Round15Queries
-    // .docLines]] — no shuffle, no self-join); the islands merge is ONE
-    // window function partitioned by (doc_id, lang) — partitions are
-    // doc-bounded, never corpus-sized — and one (doc_id, lang, grp)
-    // aggregate. Nothing corpus-wide shuffles except the doc_id-keyed
-    // exchange every per-doc operator pays.
-    "t_lang_spans" -> ((s, d) =>
-      langSpans(Tables.documents(s, d).select(col("doc_id"), col("text"))))
-  )
-
   /** Core of `t_lang_spans`, reusable over any (doc_id, text) frame
     * (spec-tested on planted code-switch fixtures): classify each
     * [[SpanWindowTokens]]-token window by the shared five-language
@@ -270,13 +248,16 @@ object Round17Queries {
       .limit(Bm25TopK)
   }
 
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[QueryDef] = Seq(
 
-    // the bigram/bucket/log-ratio arithmetic replayed term-for-term: the
-    // strpos fold IS conv(md5-prefix, 16, 10) (Round11's bucketSql
-    // pairing), and the micro-unit rounding happens per BUCKET, so the
-    // per-doc BIGINT sums are exact in both engines
-    "t_dsir_weights" ->
+    // R20 — DSIR IMPORTANCE WEIGHTS. Scale shape: see [[dsirWeights]].
+    QueryDef("t_dsir_weights", (s, d) =>
+      dsirWeights(Tables.documents(s, d)
+        .select(col("doc_id"), col("source"), col("text"))),
+      // the bigram/bucket/log-ratio arithmetic replayed term-for-term: the
+      // strpos fold IS conv(md5-prefix, 16, 10) (Round11's bucketSql
+      // pairing), and the micro-unit rounding happens per BUCKET, so the
+      // per-doc BIGINT sums are exact in both engines
       s"""WITH toks AS (
            SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
          grams AS (
@@ -314,18 +295,29 @@ object Round17Queries {
                 CAST(coalesce(s.dsir_units, 0) AS BIGINT) AS dsir_units,
                 coalesce(s.dsir_units, 0) > 0 AS selected
          FROM documents d LEFT JOIN scored s USING (doc_id)
-         WHERE d.source <> 'src0' ORDER BY d.doc_id""",
+         WHERE d.source <> 'src0' ORDER BY d.doc_id"""),
 
-    // identical idf/saturation/length-norm formula with the CASTs in the
-    // same positions (every float op promotes from the same integers), so
-    // the micro-unit weights agree term-for-term
-    "t_bm25_topk" -> bm25OracleSql(Bm25Query),
+    // R20 — BM25 TOP-K RETRIEVAL. Scale shape: see [[bm25TopK]].
+    QueryDef("t_bm25_topk", (s, d) =>
+      bm25TopK(Tables.documents(s, d).select(col("doc_id"), col("text"))),
+      // identical idf/saturation/length-norm formula with the CASTs in the
+      // same positions (every float op promotes from the same integers), so
+      // the micro-unit weights agree term-for-term
+      bm25OracleSql(Bm25Query)),
 
-    // replays the window formation (1-based subscripts grouped by
-    // (i-1)//w, the d_line_dedup discipline), the per-window marker-argmax
-    // vote (rebuilt window string ⇒ the SAME shared langVoteSql as the
-    // doc-level classifier), and the same islands arithmetic
-    "t_lang_spans" ->
+    // R20 — SPAN-LEVEL LANGUAGE SEGMENTATION. Scale shape: window
+    // formation is the shared per-row narrow slice ([[Round15Queries
+    // .docLines]] — no shuffle, no self-join); the islands merge is ONE
+    // window function partitioned by (doc_id, lang) — partitions are
+    // doc-bounded, never corpus-sized — and one (doc_id, lang, grp)
+    // aggregate. Nothing corpus-wide shuffles except the doc_id-keyed
+    // exchange every per-doc operator pays.
+    QueryDef("t_lang_spans", (s, d) =>
+      langSpans(Tables.documents(s, d).select(col("doc_id"), col("text"))),
+      // replays the window formation (1-based subscripts grouped by
+      // (i-1)//w, the d_line_dedup discipline), the per-window marker-argmax
+      // vote (rebuilt window string ⇒ the SAME shared langVoteSql as the
+      // doc-level classifier), and the same islands arithmetic
       s"""WITH toks AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
                   generate_subscripts(string_split(text, ' '), 1) AS i
@@ -351,6 +343,6 @@ object Round17Queries {
                 lang,
                 CAST(count(*) AS BIGINT) AS n_windows
          FROM isl GROUP BY doc_id, lang, grp
-         ORDER BY doc_id, span_start"""
+         ORDER BY doc_id, span_start""")
   )
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object Round4Queries {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[QueryDef] = Seq(
     // R21+R18 bridge — perceptual-hash near-dup over BINARY payloads: the
     // multimodal twin of MinHash. Each asset's payload reduces to the 8-bin
     // byte-histogram feature (the same partition-batched decode stub the
@@ -27,7 +27,7 @@ object Round4Queries {
     // anywhere), and blocked pairs are verified by integer L1 distance.
     // Scale: one groupBy on the 8-bit hash, Σ bucket² ≪ n², same shape as
     // every other blocked near-dup path here.
-    "m_phash_neardup" -> ((s, d) => {
+    QueryDef("m_phash_neardup", (s, d) => {
       // Domain guard, mirrored in the oracle: payloads must fill all 8
       // histogram slots (≥ 8 bytes) and be single-byte text (the decode
       // stub hashes BYTES; the SQL twin models characters — they agree
@@ -53,7 +53,34 @@ object Round4Queries {
                             0L, (acc, v) -> acc + v)""").as("l1_units"))
         .filter(col("l1_units") <= 500) // 0.05 in 1e-4 units
         .orderBy("asset_a", "asset_b")
-    }),
+    },
+      // feature units per (doc, slot) exactly as the m_decode_features twin,
+      // then integer phash + integer L1 — mirrors the Spark arithmetic 1:1
+      """WITH dom AS (
+           SELECT doc_id, text FROM documents
+           WHERE length(text) >= 8
+             AND length(text) = octet_length(CAST(text AS BLOB))),
+         b AS (
+           SELECT doc_id, length(text) AS n, t.i % 8 AS slot,
+                  ascii(substring(text, CAST(t.i + 1 AS INT), 1)) / 255.0 AS v
+           FROM dom, unnest(generate_series(0, length(text) - 1)) AS t(i)),
+         f AS (SELECT doc_id, slot,
+                      CAST(round(round(sum(v) / max(n) * 10000) / 10000 * 10000) AS BIGINT) AS u
+               FROM b GROUP BY doc_id, slot),
+         ph AS (SELECT doc_id,
+                       CAST(sum(CASE WHEN 8 * u > (SELECT sum(u) FROM f f2 WHERE f2.doc_id = f.doc_id)
+                                THEN CAST(1 AS BIGINT) << slot ELSE 0 END) AS BIGINT) AS phash
+                FROM f GROUP BY doc_id),
+         pairs AS (
+           SELECT a.doc_id AS asset_a, b.doc_id AS asset_b
+           FROM ph a JOIN ph b ON a.phash = b.phash AND a.doc_id < b.doc_id)
+         SELECT asset_a, asset_b, CAST(sum(abs(fa.u - fb.u)) AS BIGINT) AS l1_units
+         FROM pairs
+           JOIN f fa ON fa.doc_id = asset_a
+           JOIN f fb ON fb.doc_id = asset_b AND fb.slot = fa.slot
+         GROUP BY asset_a, asset_b
+         HAVING sum(abs(fa.u - fb.u)) <= 500
+         ORDER BY asset_a, asset_b"""),
 
     // R17 — INCREMENTAL snapshot dedup: the every-crawl primitive — an
     // incoming batch (sources src10+, the "new crawl") checked against the
@@ -62,7 +89,7 @@ object Round4Queries {
     // the big text never moves; at 100 TB the base sha set is a bucketed
     // table the incoming batch shuffle-joins against (no broadcast
     // assumption), exactly this plan.
-    "d_dedup_incremental" -> ((s, d) => {
+    QueryDef("d_dedup_incremental", (s, d) => {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), sha256Hex(col("text")).as("content_sha"),
           expr("cast(regexp_replace(source, '[^0-9]', '') as int)").as("src_idx"))
@@ -74,7 +101,15 @@ object Round4Queries {
         .select(col("doc_id"), col("content_sha"),
           coalesce(!col("seen"), lit(true)).as("is_new"))
         .orderBy("doc_id")
-    }),
+    },
+      """WITH d AS (
+           SELECT doc_id, sha256(text) AS content_sha,
+                  CAST(regexp_replace(source, '[^0-9]', '', 'g') AS INT) AS src_idx
+           FROM documents),
+         base AS (SELECT DISTINCT content_sha FROM d WHERE src_idx < 10)
+         SELECT doc_id, content_sha,
+                (content_sha NOT IN (SELECT content_sha FROM base)) AS is_new
+         FROM d WHERE src_idx >= 10 ORDER BY doc_id"""),
 
     // R20/R12 — SEQUENCE PACKING: the GPT-style concat-and-chunk that turns
     // a document corpus into fixed-size training sequences. Docs are
@@ -86,7 +121,7 @@ object Round4Queries {
     // shuffle on the shard key; shards are the parallelism unit, so packing
     // 100 TB is embarrassingly parallel across shards and each shard's
     // prefix sum is a linear scan. Pure integer arithmetic ⇒ exact oracle.
-    "t_pack_sequences" -> ((s, d) => {
+    QueryDef("t_pack_sequences", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val binCap = 512
       val toks = Tables.documents(s, d)
@@ -101,7 +136,21 @@ object Round4Queries {
           ((col("cum") - 1) / binCap).cast("long").as("end_bin"),
           ((col("cum") - col("n_tokens")) % binCap).as("offset_in_bin"))
         .orderBy("doc_id")
-    }),
+    },
+      """WITH t AS (
+           SELECT doc_id, doc_id % 32 AS shard,
+                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+           FROM documents),
+         c AS (
+           SELECT doc_id, shard, n_tokens,
+                  sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+           FROM t)
+         SELECT doc_id, shard, n_tokens,
+                CAST(floor((cum - n_tokens) / 512.0) AS BIGINT) AS start_bin,
+                CAST(floor((cum - 1) / 512.0) AS BIGINT) AS end_bin,
+                CAST((cum - n_tokens) % 512 AS BIGINT) AS offset_in_bin
+         FROM c ORDER BY doc_id"""),
 
     // R10/R17 — deterministic reservoir sample: k docs per language chosen
     // by md5 rank order — a uniform-ish, seed-free, engine-reproducible
@@ -111,14 +160,21 @@ object Round4Queries {
     // Runs through the native bounded-heap TopKPerKey path: at most k rows
     // per (key, partition) enter the shuffle, the full corpus is never
     // sorted — the same plan a 100 TB per-key sample needs.
-    "q_reservoir_sample" -> ((s, d) => {
+    QueryDef("q_reservoir_sample", (s, d) => {
       val tagged = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), md5(col("doc_id").cast("string")).as("tag"))
       graft.plans.TopK.perKey(tagged, keys = Seq("lang"),
           order = Seq(graft.plans.TopK.Ord("tag"), graft.plans.TopK.Ord("doc_id")), k = 10)
         .select(col("lang"), col("rk"), col("doc_id"), col("tag"))
         .orderBy("lang", "rk")
-    }),
+    },
+      """WITH tagged AS (
+           SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS tag FROM documents),
+         r AS (
+           SELECT lang, doc_id, tag,
+                  CAST(row_number() OVER (PARTITION BY lang ORDER BY tag, doc_id) AS INT) AS rk
+           FROM tagged)
+         SELECT lang, rk, doc_id, tag FROM r WHERE rk <= 10 ORDER BY lang, rk"""),
 
     // CAPSTONE — the end-to-end corpus build, composed from the proven
     // operators as ONE pipeline: quality gate (t_quality_score blend ≥
@@ -130,7 +186,7 @@ object Round4Queries {
     // arithmetic). This is the query a user actually runs before training:
     // every stage is a keyed shuffle or a per-shard window, nothing
     // quadratic, and the whole composition is DuckDB-oracled end-to-end.
-    "d_corpus_build" -> ((s, d) => {
+    QueryDef("d_corpus_build", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val toks = split(col("text"), " ")
       // text reduces to its sha256 content address in the scan projection
@@ -164,7 +220,7 @@ object Round4Queries {
       // near-duplicates. Composing the registered operator is the point of
       // the capstone: its own oracle already proved the pair set equals
       // the all-pairs ground truth.
-      val dupped = DedupQueries.defs("d_minhash_lsh")(s, d)
+      val dupped = DedupQueries.minhashLshPairs(s, d)
         .select(col("doc_b").as("doc_id")).distinct()
       val kept = exactKept.join(dupped, Seq("doc_id"), "left_anti")
       // pack survivors: per-shard prefix sums into 512-token bins
@@ -175,78 +231,9 @@ object Round4Queries {
         .select(col("doc_id"), col("n_tokens"), col("quality"), col("shard"),
           ((col("cum") - col("n_tokens")) / 512).cast("long").as("start_bin"))
         .orderBy("doc_id")
-    }),
-
-    // R20 — collocation mining: top bigrams by pointwise mutual information
-    // over adjacent token pairs, the standard corpus-statistics pass for
-    // tokenizer/vocabulary work. Exact integer counts (bigram + unigram
-    // tables, two linear groupBys), one log at the end, min-count cut so
-    // PMI is stable, ties broken lexicographically. At 100 TB both count
-    // tables partial-aggregate map-side; the join is bigram→unigram (two
-    // broadcastable aggregates after the cut).
-    "t_collocations" -> ((s, d) => {
-      val toks = Tables.documents(s, d)
-        .select(split(col("text"), " ").as("t"))
-      // bigram branch only: Spark's sequence(1, 0) DESCENDS, so a 1-token
-      // doc must not produce a bogus (t[1], t[0]) bigram — but its token
-      // still counts in the unigram model (the oracle's uni CTE spans ALL
-      // docs, so the filter must not leak into that branch)
-      val bigrams = toks.filter(size(col("t")) >= 2)
-        .select(explode(expr(
-          """transform(sequence(1, size(t) - 1),
-               i -> struct(element_at(t, i) AS w1, element_at(t, i + 1) AS w2))"""))
-          .as("bg"))
-        .groupBy(col("bg.w1"), col("bg.w2")).agg(count(lit(1)).as("c_ab"))
-      val unigrams = toks.select(explode(col("t")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("c_w"))
-      val nBig = bigrams.agg(sum(col("c_ab")).as("n_big"))
-      val nUni = unigrams.agg(sum(col("c_w")).as("n_uni"))
-      bigrams.filter(col("c_ab") >= 5)
-        .join(unigrams.select(col("w").as("w1"), col("c_w").as("c_a")), "w1")
-        .join(unigrams.select(col("w").as("w2"), col("c_w").as("c_b")), "w2")
-        .crossJoin(nBig).crossJoin(nUni)
-        .select(col("w1"), col("w2"), col("c_ab"),
-          floorRound(
-            log((col("c_ab").cast("double") / col("n_big")) /
-              ((col("c_a").cast("double") / col("n_uni")) *
-               (col("c_b").cast("double") / col("n_uni")))), 4).as("pmi"))
-        .orderBy(col("pmi").desc, col("w1"), col("w2"))
-        .limit(20)
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-    // feature units per (doc, slot) exactly as the m_decode_features twin,
-    // then integer phash + integer L1 — mirrors the Spark arithmetic 1:1
-    "m_phash_neardup" ->
-      """WITH dom AS (
-           SELECT doc_id, text FROM documents
-           WHERE length(text) >= 8
-             AND length(text) = octet_length(CAST(text AS BLOB))),
-         b AS (
-           SELECT doc_id, length(text) AS n, t.i % 8 AS slot,
-                  ascii(substring(text, CAST(t.i + 1 AS INT), 1)) / 255.0 AS v
-           FROM dom, unnest(generate_series(0, length(text) - 1)) AS t(i)),
-         f AS (SELECT doc_id, slot,
-                      CAST(round(round(sum(v) / max(n) * 10000) / 10000 * 10000) AS BIGINT) AS u
-               FROM b GROUP BY doc_id, slot),
-         ph AS (SELECT doc_id,
-                       CAST(sum(CASE WHEN 8 * u > (SELECT sum(u) FROM f f2 WHERE f2.doc_id = f.doc_id)
-                                THEN CAST(1 AS BIGINT) << slot ELSE 0 END) AS BIGINT) AS phash
-                FROM f GROUP BY doc_id),
-         pairs AS (
-           SELECT a.doc_id AS asset_a, b.doc_id AS asset_b
-           FROM ph a JOIN ph b ON a.phash = b.phash AND a.doc_id < b.doc_id)
-         SELECT asset_a, asset_b, CAST(sum(abs(fa.u - fb.u)) AS BIGINT) AS l1_units
-         FROM pairs
-           JOIN f fa ON fa.doc_id = asset_a
-           JOIN f fb ON fb.doc_id = asset_b AND fb.slot = fa.slot
-         GROUP BY asset_a, asset_b
-         HAVING sum(abs(fa.u - fb.u)) <= 500
-         ORDER BY asset_a, asset_b""",
-    // the composed pipeline, mirrored stage by stage: quality blend →
-    // exact-dedup survivor → adjacent near-dup drop → per-shard packing
-    "d_corpus_build" ->
+    },
+      // the composed pipeline, mirrored stage by stage: quality blend →
+      // exact-dedup survivor → adjacent near-dup drop → per-shard packing
       """WITH scored AS (
            SELECT doc_id, text,
                   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
@@ -290,40 +277,44 @@ object Round4Queries {
            FROM kept)
          SELECT doc_id, n_tokens, quality, shard,
                 CAST(floor((cum - n_tokens) / 512.0) AS BIGINT) AS start_bin
-         FROM packed ORDER BY doc_id""",
-    "t_pack_sequences" ->
-      """WITH t AS (
-           SELECT doc_id, doc_id % 32 AS shard,
-                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-           FROM documents),
-         c AS (
-           SELECT doc_id, shard, n_tokens,
-                  sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM t)
-         SELECT doc_id, shard, n_tokens,
-                CAST(floor((cum - n_tokens) / 512.0) AS BIGINT) AS start_bin,
-                CAST(floor((cum - 1) / 512.0) AS BIGINT) AS end_bin,
-                CAST((cum - n_tokens) % 512 AS BIGINT) AS offset_in_bin
-         FROM c ORDER BY doc_id""",
-    "q_reservoir_sample" ->
-      """WITH tagged AS (
-           SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS tag FROM documents),
-         r AS (
-           SELECT lang, doc_id, tag,
-                  CAST(row_number() OVER (PARTITION BY lang ORDER BY tag, doc_id) AS INT) AS rk
-           FROM tagged)
-         SELECT lang, rk, doc_id, tag FROM r WHERE rk <= 10 ORDER BY lang, rk""",
-    "d_dedup_incremental" ->
-      """WITH d AS (
-           SELECT doc_id, sha256(text) AS content_sha,
-                  CAST(regexp_replace(source, '[^0-9]', '', 'g') AS INT) AS src_idx
-           FROM documents),
-         base AS (SELECT DISTINCT content_sha FROM d WHERE src_idx < 10)
-         SELECT doc_id, content_sha,
-                (content_sha NOT IN (SELECT content_sha FROM base)) AS is_new
-         FROM d WHERE src_idx >= 10 ORDER BY doc_id""",
-    "t_collocations" ->
+         FROM packed ORDER BY doc_id"""),
+
+    // R20 — collocation mining: top bigrams by pointwise mutual information
+    // over adjacent token pairs, the standard corpus-statistics pass for
+    // tokenizer/vocabulary work. Exact integer counts (bigram + unigram
+    // tables, two linear groupBys), one log at the end, min-count cut so
+    // PMI is stable, ties broken lexicographically. At 100 TB both count
+    // tables partial-aggregate map-side; the join is bigram→unigram (two
+    // broadcastable aggregates after the cut).
+    QueryDef("t_collocations", (s, d) => {
+      val toks = Tables.documents(s, d)
+        .select(split(col("text"), " ").as("t"))
+      // bigram branch only: Spark's sequence(1, 0) DESCENDS, so a 1-token
+      // doc must not produce a bogus (t[1], t[0]) bigram — but its token
+      // still counts in the unigram model (the oracle's uni CTE spans ALL
+      // docs, so the filter must not leak into that branch)
+      val bigrams = toks.filter(size(col("t")) >= 2)
+        .select(explode(expr(
+          """transform(sequence(1, size(t) - 1),
+               i -> struct(element_at(t, i) AS w1, element_at(t, i + 1) AS w2))"""))
+          .as("bg"))
+        .groupBy(col("bg.w1"), col("bg.w2")).agg(count(lit(1)).as("c_ab"))
+      val unigrams = toks.select(explode(col("t")).as("w"))
+        .groupBy(col("w")).agg(count(lit(1)).as("c_w"))
+      val nBig = bigrams.agg(sum(col("c_ab")).as("n_big"))
+      val nUni = unigrams.agg(sum(col("c_w")).as("n_uni"))
+      bigrams.filter(col("c_ab") >= 5)
+        .join(unigrams.select(col("w").as("w1"), col("c_w").as("c_a")), "w1")
+        .join(unigrams.select(col("w").as("w2"), col("c_w").as("c_b")), "w2")
+        .crossJoin(nBig).crossJoin(nUni)
+        .select(col("w1"), col("w2"), col("c_ab"),
+          floorRound(
+            log((col("c_ab").cast("double") / col("n_big")) /
+              ((col("c_a").cast("double") / col("n_uni")) *
+               (col("c_b").cast("double") / col("n_uni")))), 4).as("pmi"))
+        .orderBy(col("pmi").desc, col("w1"), col("w2"))
+        .limit(20)
+    },
       """WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents),
          bg AS (
            SELECT t[i] AS w1, t[i + 1] AS w2, CAST(count(*) AS BIGINT) AS c_ab
@@ -342,6 +333,6 @@ object Round4Queries {
            JOIN uni cb ON cb.w = w2
            CROSS JOIN nb CROSS JOIN nu
          WHERE c_ab >= 5
-         ORDER BY pmi DESC, w1, w2 LIMIT 20"""
+         ORDER BY pmi DESC, w1, w2 LIMIT 20""")
   )
 }

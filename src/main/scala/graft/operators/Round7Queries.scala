@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   */
 object Round7Queries {
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[QueryDef] = Seq(
     // R17/R18/R20 capstone v2 — the FULL modern pre-training pipeline as
     // one oracled query, composing every hygiene family the engine has:
     //   quality gate (0.52 blend) → repetition gate (Gopher dials) →
@@ -23,7 +23,7 @@ object Round7Queries {
     // semi-probe, or a per-shard window — nothing quadratic; the composed
     // operators' own oracles already proved their pieces, and this oracle
     // replays the whole composition end-to-end.
-    "d_corpus_build_v2" -> ((s, d) => {
+    QueryDef("d_corpus_build_v2", (s, d) => {
       graft.plans.GraftFunctions.register(s)
       import org.apache.spark.sql.expressions.Window
       val all = Tables.documents(s, d)
@@ -71,7 +71,7 @@ object Round7Queries {
       // near-dup drop: the registered MinHash-LSH operator's verified
       // pair set (corpus-wide, like v1 — a near-dup of ANY doc, eval
       // included, is dropped), higher side of each pair goes
-      val dupped = DedupQueries.defs("d_minhash_lsh")(s, d)
+      val dupped = DedupQueries.minhashLshPairs(s, d)
         .select(col("doc_b").as("doc_id")).distinct()
       val kept = exactKept.join(dupped, Seq("doc_id"), "left_anti")
       val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
@@ -81,11 +81,7 @@ object Round7Queries {
         .select(col("doc_id"), col("n_tokens"), col("quality"), col("shard"),
           ((col("cum") - col("n_tokens")) / 512).cast("long").as("start_bin"))
         .orderBy("doc_id")
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-    "d_corpus_build_v2" ->
+    },
       """WITH scored AS (
            SELECT doc_id, text,
                   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
@@ -158,6 +154,6 @@ object Round7Queries {
            FROM kept)
          SELECT doc_id, n_tokens, quality, shard,
                 CAST(floor((cum - n_tokens) / 512.0) AS BIGINT) AS start_bin
-         FROM packed ORDER BY doc_id"""
+         FROM packed ORDER BY doc_id""")
   )
 }

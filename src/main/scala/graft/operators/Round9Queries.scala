@@ -272,126 +272,6 @@ object Round9Queries {
       .orderBy("step")
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // R19/R10 — MMR diversified rerank (the retrieval-serving stage after
-    // ANN shortlisting: pure top-k returns near-duplicate neighbors; MMR
-    // greedily trades relevance against similarity-to-already-selected,
-    // λ = 0.7). Exact top-50 cosine shortlist (TakeOrderedAndProject,
-    // linear, shuffle-free), then the greedy k=10 selection unrolled at
-    // plan time inside ONE packed row — integer-unit scores replayed
-    // exactly by a 10-step DuckDB CTE chain.
-    "v_mmr_rerank" -> ((s, d) => mmrRerank(s, Tables.embeddings(s, d))),
-
-    // R17/R18 — containment (asymmetric) near-dup: per doc, the max
-    // fraction of its own 3-shingles appearing verbatim in any single
-    // other doc — the quotation/subset detector symmetric Jaccard
-    // structurally misses (see [[containmentStats]]; spec plants a
-    // doc-inside-doc pair Jaccard scores < 0.5 but containment scores
-    // 1.0). Oracled exactly: the oracle replays postings (on the gram
-    // string where Spark uses its xxhash64 — the span-dedup trade),
-    // the sorted cap-64 trim, pair counts, and the per-doc max.
-    "d_containment" -> ((s, d) => {
-      graft.plans.GraftFunctions.register(s)
-      containmentStats(Tables.documents(s, d))
-    }),
-
-    // R20/R18 — bloom-prefiltered benchmark decontamination: the scale
-    // form of t_decontaminate. The broadcast core ships the eval gram
-    // STRINGS to every task (~30 bytes/gram — fine while the eval suite
-    // is small, the reason t_decontaminate broadcasts it); this variant
-    // ships a ~128 KB Bloom binary (1.2 bytes/gram at fpp 1%) built as a
-    // scalar subquery over the eval grams, probes every training gram
-    // with graft_bloom_contains BEFORE any join, and runs the exact
-    // membership check only on the prefiltered survivors — at 100 TB the
-    // gram-keyed exchange carries the ~contaminated sliver of the corpus
-    // instead of every training gram, and the eval set can grow 1000×
-    // before the bloom outgrows a broadcast. False positives only waste
-    // prefilter rows (the exact semi join keeps semantics precise), so
-    // the oracle is t_decontaminate's own SQL: result invariance, the
-    // q_bloom_prefilter convention.
-    "t_decontaminate_bloom" -> ((s, d) =>
-      decontaminateBloom(s, Tables.documents(s, d))),
-
-    // R4/§4 — runtime Bloom-filter join prefilter: the 100 TB semi-join
-    // reduction. A selective dim predicate (one brand ⇒ ~5% of parts)
-    // builds a Bloom filter over the surviving join keys as a SCALAR
-    // SUBQUERY (one tiny job, result inlined into the fact scan's filter);
-    // the fact table is probed with graft_bloom_contains BEFORE any
-    // exchange, so at scale the shuffle moves ~5% of the fact rows instead
-    // of all of them. Bloom false positives make the probe a prefilter,
-    // not a join: the exact semi join behind it keeps the result precise,
-    // which is why the oracle is the PLAIN semi-join SQL (result
-    // invariance, the q_skew_salted_join convention). The two expressions
-    // are Spark's own runtime-row-level-filter machinery
-    // (BloomFilterAggregate / BloomFilterMightContain), which Spark ships
-    // unregistered — GraftFunctions exposes them so query code can opt in
-    // where the optimizer's InjectRuntimeFilter declines (e.g. below its
-    // size thresholds, or on non-equi compositions). Both key sides hash
-    // through xxhash64 on the same BIGINT type, so probe hashes agree
-    // with build hashes; sizing (4096 items / 256 Kibit ⇒ fpp ≈ 2e-12 at
-    // 96 keys) makes a planted false positive astronomically unlikely and
-    // the plan deterministic in practice.
-    "q_bloom_prefilter" -> ((s, d) => {
-      graft.plans.GraftFunctions.register(s)
-      Tables.part(s, d).filter(col("p_brand") === "Brand#4")
-        .select(col("p_partkey"))
-        .createOrReplaceTempView("graft_bloom_dim")
-      Tables.lineitem(s, d).createOrReplaceTempView("graft_bloom_fact")
-      // revenue in per-row integer cents, summed exactly (r19): the old
-      // sum-then-round drifted a cent at sf1 when the float sum's order
-      // dependence landed on a .xx5 boundary (row 234: 8280522.46 vs
-      // .47) — per-row floor(x*100+0.5) is a single deterministic double
-      // op in both engines, and the BIGINT sum is order-free.
-      s.sql(
-        """SELECT l_partkey AS p_partkey,
-                  CAST(count(*) AS BIGINT) AS n_ship,
-                  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount)
-                                      * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100
-                    AS revenue
-           FROM graft_bloom_fact
-           WHERE graft_bloom_contains(
-                   (SELECT graft_bloom_agg(xxhash64(p_partkey), 4096, 262144)
-                    FROM graft_bloom_dim),
-                   xxhash64(l_partkey))
-             AND l_partkey IN (SELECT p_partkey FROM graft_bloom_dim)
-           GROUP BY l_partkey
-           ORDER BY p_partkey""")
-    }),
-
-    // R17/R18 — content-defined-chunking (CDC) dedup: the variable-length
-    // sibling of d_span_dedup. Fixed-width shingles miss duplication that
-    // shifts by an edit; CDC cuts chunk boundaries where the CONTENT says
-    // to (a rolling window hash hitting a mask), so a shared run of text
-    // re-synchronizes to identical chunks even when its surrounding offsets
-    // differ — the storage-dedup trick (LBFS/rsync lineage) applied to
-    // corpus text. Boundary rule: cut after token j when the md5 of the
-    // trailing 4-token window ends in a hex digit with its three low bits
-    // zero (p = 1/8 ⇒ ~8-token expected chunks); a final cut always lands
-    // at n, so every doc has ≥ 1 chunk. Chunk identity is the md5 of the
-    // chunk text — identical hex in Spark and DuckDB, so the oracle
-    // replays boundaries AND identities exactly (the t_rolling_fingerprint
-    // convention). Shuffle shape is d_span_dedup's: Spark groups/joins on
-    // the 64-bit xxhash64 of the chunk md5 — 8-byte keys, chunk strings
-    // never move (the oracle groups on the md5 itself; equal results
-    // absent a 64-bit collision, the documented span-dedup trade). All
-    // boundary/identity work is per-row higher-order functions: the only
-    // shuffles are the hash-keyed groupBys — linear at any scale.
-    "d_cdc_chunks" -> ((s, d) => cdcChunkStats(Tables.documents(s, d))),
-
-    // R20 — BPE merge-pair mining: the corpus-statistics pass one
-    // iteration of byte-pair-encoding tokenizer training runs. Production
-    // BPE counts adjacent-symbol pairs over the DISTINCT-word frequency
-    // table, not the raw token stream — distinct words are orders of
-    // magnitude fewer than tokens, so the expensive per-word pair
-    // expansion touches each spelling once and rides the word's count as
-    // a weight (the scale shape: one token-keyed shuffle to build the
-    // vocab, then pair rows bounded by |vocab| × avg word length). Top-20
-    // pairs by weighted count, ties broken by pair text — a total order,
-    // so the LIMIT is deterministic across engines and partitionings.
-    // (Within-word pairs only; no end-of-word marker — documented
-    // simplification of the first merge step.)
-    "t_bpe_pairs" -> ((s, d) => bpePairs(Tables.documents(s, d))))
-
   /** DuckDB twin of [[mmrRerank]]: the greedy selection unrolled as a
     * k-step CTE chain (argmax via ORDER BY score DESC, id LIMIT 1; the
     * candidate set shrinks by the pick and re-maxes ms each step) —
@@ -439,11 +319,31 @@ object Round9Queries {
         $union ORDER BY step"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "v_mmr_rerank" -> mmrOracle(10),
-    // postings keyed by the gram string where Spark keys by its xxhash64
-    // — equal results absent a 64-bit collision (the d_span_dedup trade)
-    "d_containment" ->
+  val queries: Seq[QueryDef] = Seq(
+    // R19/R10 — MMR diversified rerank (the retrieval-serving stage after
+    // ANN shortlisting: pure top-k returns near-duplicate neighbors; MMR
+    // greedily trades relevance against similarity-to-already-selected,
+    // λ = 0.7). Exact top-50 cosine shortlist (TakeOrderedAndProject,
+    // linear, shuffle-free), then the greedy k=10 selection unrolled at
+    // plan time inside ONE packed row — integer-unit scores replayed
+    // exactly by a 10-step DuckDB CTE chain.
+    QueryDef("v_mmr_rerank", (s, d) => mmrRerank(s, Tables.embeddings(s, d)),
+      mmrOracle(10)),
+
+    // R17/R18 — containment (asymmetric) near-dup: per doc, the max
+    // fraction of its own 3-shingles appearing verbatim in any single
+    // other doc — the quotation/subset detector symmetric Jaccard
+    // structurally misses (see [[containmentStats]]; spec plants a
+    // doc-inside-doc pair Jaccard scores < 0.5 but containment scores
+    // 1.0). Oracled exactly: the oracle replays postings (on the gram
+    // string where Spark uses its xxhash64 — the span-dedup trade),
+    // the sorted cap-64 trim, pair counts, and the per-doc max.
+    QueryDef("d_containment", (s, d) => {
+      graft.plans.GraftFunctions.register(s)
+      containmentStats(Tables.documents(s, d))
+    },
+      // postings keyed by the gram string where Spark keys by its xxhash64
+      // — equal results absent a 64-bit collision (the d_span_dedup trade)
       s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
          sh AS (
            SELECT doc_id,
@@ -475,10 +375,26 @@ object Round9Queries {
          FROM documents d
            LEFT JOIN sz ON sz.doc_id = d.doc_id
            LEFT JOIN mx ON mx.doc_id = d.doc_id
-         ORDER BY d.doc_id""",
-    // t_decontaminate's own oracle verbatim: the bloom is a prefilter,
-    // the exact semi join behind it keeps the result identical
-    "t_decontaminate_bloom" ->
+         ORDER BY d.doc_id"""),
+
+    // R20/R18 — bloom-prefiltered benchmark decontamination: the scale
+    // form of t_decontaminate. The broadcast core ships the eval gram
+    // STRINGS to every task (~30 bytes/gram — fine while the eval suite
+    // is small, the reason t_decontaminate broadcasts it); this variant
+    // ships a ~128 KB Bloom binary (1.2 bytes/gram at fpp 1%) built as a
+    // scalar subquery over the eval grams, probes every training gram
+    // with graft_bloom_contains BEFORE any join, and runs the exact
+    // membership check only on the prefiltered survivors — at 100 TB the
+    // gram-keyed exchange carries the ~contaminated sliver of the corpus
+    // instead of every training gram, and the eval set can grow 1000×
+    // before the bloom outgrows a broadcast. False positives only waste
+    // prefilter rows (the exact semi join keeps semantics precise), so
+    // the oracle is t_decontaminate's own SQL: result invariance, the
+    // q_bloom_prefilter convention.
+    QueryDef("t_decontaminate_bloom", (s, d) =>
+      decontaminateBloom(s, Tables.documents(s, d)),
+      // t_decontaminate's own oracle verbatim: the bloom is a prefilter,
+      // the exact semi join behind it keeps the result identical
       """WITH toks AS (SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
          sh AS (
            SELECT doc_id, source,
@@ -494,10 +410,55 @@ object Round9Queries {
                 CAST(coalesce(hits.n, 0) AS BIGINT) AS n_contaminated_grams,
                 coalesce(hits.n, 0) > 0 AS contaminated
          FROM documents d LEFT JOIN hits USING (doc_id)
-         WHERE d.source <> 'src0' ORDER BY d.doc_id""",
-    // the PLAIN exact semi join — the bloom is a prefilter, never a
-    // semantics change (result invariance, q_skew_salted_join convention)
-    "q_bloom_prefilter" ->
+         WHERE d.source <> 'src0' ORDER BY d.doc_id"""),
+
+    // R4/§4 — runtime Bloom-filter join prefilter: the 100 TB semi-join
+    // reduction. A selective dim predicate (one brand ⇒ ~5% of parts)
+    // builds a Bloom filter over the surviving join keys as a SCALAR
+    // SUBQUERY (one tiny job, result inlined into the fact scan's filter);
+    // the fact table is probed with graft_bloom_contains BEFORE any
+    // exchange, so at scale the shuffle moves ~5% of the fact rows instead
+    // of all of them. Bloom false positives make the probe a prefilter,
+    // not a join: the exact semi join behind it keeps the result precise,
+    // which is why the oracle is the PLAIN semi-join SQL (result
+    // invariance, the q_skew_salted_join convention). The two expressions
+    // are Spark's own runtime-row-level-filter machinery
+    // (BloomFilterAggregate / BloomFilterMightContain), which Spark ships
+    // unregistered — GraftFunctions exposes them so query code can opt in
+    // where the optimizer's InjectRuntimeFilter declines (e.g. below its
+    // size thresholds, or on non-equi compositions). Both key sides hash
+    // through xxhash64 on the same BIGINT type, so probe hashes agree
+    // with build hashes; sizing (4096 items / 256 Kibit ⇒ fpp ≈ 2e-12 at
+    // 96 keys) makes a planted false positive astronomically unlikely and
+    // the plan deterministic in practice.
+    QueryDef("q_bloom_prefilter", (s, d) => {
+      graft.plans.GraftFunctions.register(s)
+      Tables.part(s, d).filter(col("p_brand") === "Brand#4")
+        .select(col("p_partkey"))
+        .createOrReplaceTempView("graft_bloom_dim")
+      Tables.lineitem(s, d).createOrReplaceTempView("graft_bloom_fact")
+      // revenue in per-row integer cents, summed exactly (r19): the old
+      // sum-then-round drifted a cent at sf1 when the float sum's order
+      // dependence landed on a .xx5 boundary (row 234: 8280522.46 vs
+      // .47) — per-row floor(x*100+0.5) is a single deterministic double
+      // op in both engines, and the BIGINT sum is order-free.
+      s.sql(
+        """SELECT l_partkey AS p_partkey,
+                  CAST(count(*) AS BIGINT) AS n_ship,
+                  CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount)
+                                      * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100
+                    AS revenue
+           FROM graft_bloom_fact
+           WHERE graft_bloom_contains(
+                   (SELECT graft_bloom_agg(xxhash64(p_partkey), 4096, 262144)
+                    FROM graft_bloom_dim),
+                   xxhash64(l_partkey))
+             AND l_partkey IN (SELECT p_partkey FROM graft_bloom_dim)
+           GROUP BY l_partkey
+           ORDER BY p_partkey""")
+    },
+      // the PLAIN exact semi join — the bloom is a prefilter, never a
+      // semantics change (result invariance, q_skew_salted_join convention)
       """SELECT l_partkey AS p_partkey,
                 CAST(count(*) AS BIGINT) AS n_ship,
                 CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount)
@@ -506,10 +467,29 @@ object Round9Queries {
          FROM lineitem
          WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_brand = 'Brand#4')
          GROUP BY l_partkey
-         ORDER BY p_partkey""",
-    // groups by the chunk md5 where Spark groups by its xxhash64 — equal
-    // results absent a 64-bit collision (the d_span_dedup trade)
-    "d_cdc_chunks" ->
+         ORDER BY p_partkey"""),
+
+    // R17/R18 — content-defined-chunking (CDC) dedup: the variable-length
+    // sibling of d_span_dedup. Fixed-width shingles miss duplication that
+    // shifts by an edit; CDC cuts chunk boundaries where the CONTENT says
+    // to (a rolling window hash hitting a mask), so a shared run of text
+    // re-synchronizes to identical chunks even when its surrounding offsets
+    // differ — the storage-dedup trick (LBFS/rsync lineage) applied to
+    // corpus text. Boundary rule: cut after token j when the md5 of the
+    // trailing 4-token window ends in a hex digit with its three low bits
+    // zero (p = 1/8 ⇒ ~8-token expected chunks); a final cut always lands
+    // at n, so every doc has ≥ 1 chunk. Chunk identity is the md5 of the
+    // chunk text — identical hex in Spark and DuckDB, so the oracle
+    // replays boundaries AND identities exactly (the t_rolling_fingerprint
+    // convention). Shuffle shape is d_span_dedup's: Spark groups/joins on
+    // the 64-bit xxhash64 of the chunk md5 — 8-byte keys, chunk strings
+    // never move (the oracle groups on the md5 itself; equal results
+    // absent a 64-bit collision, the documented span-dedup trade). All
+    // boundary/identity work is per-row higher-order functions: the only
+    // shuffles are the hash-keyed groupBys — linear at any scale.
+    QueryDef("d_cdc_chunks", (s, d) => cdcChunkStats(Tables.documents(s, d)),
+      // groups by the chunk md5 where Spark groups by its xxhash64 — equal
+      // results absent a 64-bit collision (the d_span_dedup trade)
       """WITH toks AS (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS t FROM documents),
          c AS (
            SELECT doc_id, t,
@@ -540,8 +520,21 @@ object Round9Queries {
                        / greatest(tot.n_chunks, 1)) * 10000 + 0.5) / 10000
                   AS dup_chunk_frac
          FROM tot LEFT JOIN dup ON dup.doc_id = tot.doc_id
-         ORDER BY tot.doc_id""",
-    "t_bpe_pairs" ->
+         ORDER BY tot.doc_id"""),
+
+    // R20 — BPE merge-pair mining: the corpus-statistics pass one
+    // iteration of byte-pair-encoding tokenizer training runs. Production
+    // BPE counts adjacent-symbol pairs over the DISTINCT-word frequency
+    // table, not the raw token stream — distinct words are orders of
+    // magnitude fewer than tokens, so the expensive per-word pair
+    // expansion touches each spelling once and rides the word's count as
+    // a weight (the scale shape: one token-keyed shuffle to build the
+    // vocab, then pair rows bounded by |vocab| × avg word length). Top-20
+    // pairs by weighted count, ties broken by pair text — a total order,
+    // so the LIMIT is deterministic across engines and partitionings.
+    // (Within-word pairs only; no end-of-word marker — documented
+    // simplification of the first merge step.)
+    QueryDef("t_bpe_pairs", (s, d) => bpePairs(Tables.documents(s, d)),
       """WITH w AS (
            SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents),
          f AS (
@@ -557,4 +550,5 @@ object Round9Queries {
          FROM p GROUP BY pair
          ORDER BY cnt DESC, pair
          LIMIT 20""")
+  )
 }

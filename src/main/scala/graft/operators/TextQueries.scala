@@ -285,7 +285,7 @@ object TextQueries {
         repetitiveGate.as("repetitive"))
       .orderBy("doc_id")
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[QueryDef] = Seq(
     // R20 — source-mixing rebalance, the data-mixing pass every
     // pre-training pipeline runs (Pile/DoReMi-style source weighting):
     // compute each source's sampling weight to bring it down to a uniform
@@ -297,7 +297,7 @@ object TextQueries {
     // broadcasting it is correct at any scale (contrast the unigram-vocab
     // table in perplexityProxy, which must NOT broadcast). Two linear
     // passes, one per-source aggregate shuffle.
-    "t_source_sample" -> ((s, d) => {
+    QueryDef("t_source_sample", (s, d) => {
       val base = docs(s, d).select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"))
       val bySrc = base.groupBy(col("source"))
@@ -315,211 +315,7 @@ object TextQueries {
           floorRound(col("w"), 4).as("weight"),
           (h.cast("double") < col("w") * lit(2147483648.0)).as("kept"))
         .orderBy("doc_id")
-    }),
-
-    // R20 — per-document token statistics: whitespace tokens, distinct
-    // tokens, lexical diversity, BPE-ish regex token count.
-    "t_token_stats" -> ((s, d) =>
-      docs(s, d)
-        .select(
-          col("doc_id"),
-          size(split(col("text"), " ")).as("n_tokens"),
-          size(array_distinct(split(col("text"), " "))).as("n_distinct"),
-          size(regexTokens("text")).as("n_bpe_tokens"),
-          floorRound(size(array_distinct(split(col("text"), " "))).cast("double") /
-                size(split(col("text"), " ")), 4).as("diversity"))
-        .orderBy("doc_id")),
-
-    // R20 — quality scoring: length/stopword/diversity blend. Pure
-    // arithmetic over deterministic counts, mirrored in the oracle
-    // (which hardcodes the same two stopwords — the quality dial keeps
-    // its original list independently of the language-id lexicon).
-    "t_quality_score" -> ((s, d) => {
-      val toks = split(col("text"), " ")
-      val nTok = size(toks).cast("double")
-      val stopHits = size(filter(toks, t => t.isin(QualityStopwords: _*))).cast("double")
-      val avgLen = (length(col("text")) - (size(toks) - 1)).cast("double") / nTok
-      docs(s, d)
-        .select(
-          col("doc_id"),
-          floorRound(stopHits / nTok, 4).as("stopword_ratio"),
-          floorRound(avgLen, 4).as("avg_token_len"),
-          qualityBlend.as("quality"))
-        .orderBy("doc_id")
-    }),
-
-    // R20 — language-id heuristic (marker-token evidence) with accuracy
-    // readout against the labeled lang column. The corpus is synthetic word
-    // soup, so the interesting property is deterministic parity of the
-    // heuristic, which the oracle mirrors token-for-token.
-    "t_lang_id" -> ((s, d) => {
-      docs(s, d)
-        .select(col("lang"), langPred.as("lang_pred"))
-        .groupBy(col("lang"), col("lang_pred"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("lang", "lang_pred")
-    }),
-
-    // R20 — corpus profile per language: docs, chars, source spread.
-    "t_lang_profile" -> ((s, d) =>
-      docs(s, d)
-        .groupBy(col("lang"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"),
-          floorRound(avg(col("n_chars")), 2).as("avg_chars"),
-          countDistinct(col("source")).as("n_sources"))
-        .orderBy("lang")),
-
-    // R20 — TF-IDF: top term per document. Two aggregations (term counts,
-    // document frequency) and a broadcast-able df join; ordering on the
-    // rounded score so both engines break ties identically.
-    "t_tfidf_top_term" -> ((s, d) => {
-      // corpus size as a lazy broadcast scalar (no eager driver-side count)
-      val nDf = docs(s, d).agg(count(lit(1)).cast("double").as("corpus_n"))
-      val tf = docs(s, d)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      val df_ = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val w = Window.partitionBy(col("doc_id"))
-        .orderBy(col("tfidf").desc, col("term"))
-      tf.join(df_, "term").crossJoin(broadcast(nDf))
-        .withColumn("tfidf",
-          floorRound(col("tf") * log(col("corpus_n") / col("df")), 6))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("doc_id"), col("term").as("top_term"), col("tfidf"))
-        .orderBy("doc_id")
-    }),
-
-    // R20 — content fingerprints: sha256 (oracle-able, content address) and
-    // shard key prefix for routing at scale.
-    "t_fingerprint" -> ((s, d) =>
-      docs(s, d)
-        .select(
-          col("doc_id"),
-          sha256Hex(col("text")).as("sha"),
-          substring(sha256Hex(col("text")), 1, 4).as("shard_key"))
-        .orderBy("doc_id")),
-
-    // R20 — rolling-hash (winnowing-style) fingerprint over 5-gram
-    // shingles: the minimum hash over the shingle stream is the doc's
-    // near-dup prefilter key. Uses the md5 twin so the fingerprint VALUE is
-    // oracle-able cross-engine (DuckDB computes the identical hex digest);
-    // the xxhash64 production form shares the selection logic and is
-    // spec-tested (TextFunctions.rollingFingerprint).
-    "t_rolling_fingerprint" -> ((s, d) => {
-      graft.plans.GraftFunctions.register(s)
-      docs(s, d)
-        .select(col("doc_id"), rollingFingerprintMd5("text").as("fp"))
-        .filter(col("fp").isNotNull)
-        .orderBy("doc_id")
-    }),
-
-    // R20/R18 — BENCHMARK DECONTAMINATION: the pre-training hygiene step
-    // that drops training documents sharing verbatim n-grams with a
-    // held-out eval set (src0 plays the benchmark here; 5-gram at this
-    // corpus's 10-100-token docs stands in for the usual 13-gram). Scale
-    // shape: the eval gram set is tiny relative to the corpus — it
-    // BROADCASTS, so the training side streams through a broadcast
-    // semi-probe at scan speed and the only shuffle is the per-doc count
-    // on doc_id. Every training doc appears in the output (clean docs
-    // carry n=0), so the result doubles as the keep/drop manifest.
-    "t_decontaminate" -> ((s, d) => {
-      graft.plans.GraftFunctions.register(s)
-      decontaminate(docs(s, d), evalSource = "src0")
-    }),
-
-    // R20 — INTRA-DOCUMENT REPETITION (the Gopher/C4-style quality rule
-    // that drops looping generations and boilerplate): duplicate-2-gram
-    // fraction per doc plus the top-token dominance share. Pure per-row
-    // expressions + one (doc, token) count — linear, shuffle on doc_id
-    // only, no cross-doc interaction at all.
-    "t_repetition" -> ((s, d) => {
-      graft.plans.GraftFunctions.register(s)
-      repetition(docs(s, d))
-    }),
-
-    // R20 — PERPLEXITY-PROXY quality filter: per-doc average negative log
-    // probability under the corpus's own unigram model, the cheap-LM
-    // stand-in for perplexity filtering (docs far from the corpus
-    // distribution score high and get flagged). Integer 1e-4-unit
-    // arithmetic end-to-end, so the oracle replays it exactly and the
-    // per-doc sum is partition-order independent. Scale shape: the
-    // unigram model is two broadcastable aggregates; the token stream
-    // joins it broadcast and aggregates on doc_id — linear, one explode
-    // shuffle. The 34300-unit dial (avg nll ≈ 3.43 nats) sits just past
-    // this corpus's p95, so the flagged set is the genuine tail.
-    "t_perplexity_proxy" -> ((s, d) =>
-      perplexityProxy(docs(s, d), unusualUnits = 34300L)),
-
-    // R20 — CHARACTER-ENTROPY quality signal (the gibberish/garbage gate:
-    // mojibake, binary spills, and single-char floods all show up as an
-    // entropy outlier). Shannon entropy over the doc's character
-    // distribution, computed entirely PER ROW with higher-order functions —
-    // char histogram via filter-counts over the distinct alphabet (k ≈
-    // alphabet size, so O(k·n) per doc), Σ c·ln(c) floor-rounded to integer
-    // 1e-4 units term-by-term BEFORE the sum (the same order-independent
-    // integer-unit trick as t_perplexity_proxy), then
-    // H = ln(N) − S/(N·1e4) emitted in the same units. ZERO shuffle: a
-    // per-document function should never move data — this is the plan at
-    // any scale. The 27000-unit dial sits at this corpus's p05, so the
-    // flagged set is the genuine low tail.
-    "t_char_entropy" -> ((s, d) =>
-      charEntropy(docs(s, d), lowUnits = 27000L)),
-
-    // R20/R9 — heavy hitters through a COUNT-MIN SKETCH, the streaming/
-    // mergeable form of t_heavy_hitters and the fourth member of the
-    // sketch family (HLL: q_hll_union, MinHash: d_source_overlap, bitmap:
-    // q_bitmap_distinct): the corpus aggregates into ONE fixed-size CMS
-    // (Spark's count_min_sketch — map-side partial sketches merge, the
-    // shuffle carries sketches not rows), which the exact top-10 then
-    // probes via the native graft_cms_est (Spark ships the build side but
-    // no SQL probe — without it, reading an estimate means collecting the
-    // sketch to the driver). Oracled sketch-vs-exact like the others: the
-    // hashed columns are the exact counts plus the two CMS theory bounds
-    // (est ≥ true always; est ≤ true + eps·N at the sketch's confidence —
-    // eps·N ≈ 25 tokens here while a colliding counter needs all 7 rows
-    // to collide at ~2e-3 each, so the bound sits ~19 orders of magnitude
-    // above the failure odds). At 100 TB the sketch is the only state
-    // that moves: 20k×7 longs regardless of corpus size.
-    "t_cms_heavy_hitters" -> ((s, d) => {
-      graft.plans.GraftFunctions.register(s)
-      val toks = docs(s, d).select(explode(split(col("text"), " ")).as("term"))
-      val counts = toks.groupBy(col("term")).agg(count(lit(1)).as("n"))
-      val sketch = toks.agg(
-        expr("count_min_sketch(term, 0.0001d, 0.99d, 42)").as("cms"),
-        count(lit(1)).as("total"))
-      graft.plans.TopK.perKey(counts, keys = Seq(),
-          order = Seq(graft.plans.TopK.Ord("n", desc = true),
-                      graft.plans.TopK.Ord("term")), k = 10)
-        .crossJoin(broadcast(sketch))
-        .select(col("rk"), col("term"), col("n"),
-          (expr("graft_cms_est(cms, term)") >= col("n")).as("cms_ge_true"),
-          (expr("graft_cms_est(cms, term)") <=
-            col("n") + ceil(col("total") * lit(0.0001)).cast(LongType))
-            .as("cms_within_eps"))
-        .orderBy("rk")
-    }),
-
-    // R20/R10 — corpus heavy hitters (boilerplate detection): top-10 tokens
-    // by frequency through the GLOBAL TopKPerKey path (empty grouping →
-    // AllTuples distribution: per-partition heaps, single k-row merge — the
-    // vocabulary never needs a full sort).
-    "t_heavy_hitters" -> ((s, d) => {
-      val counts = docs(s, d)
-        .select(explode(split(col("text"), " ")).as("term"))
-        .groupBy(col("term")).agg(count(lit(1)).as("n"))
-      graft.plans.TopK.perKey(counts, keys = Seq(),
-          order = Seq(graft.plans.TopK.Ord("n", desc = true),
-                      graft.plans.TopK.Ord("term")), k = 10)
-        .select(col("rk"), col("term"), col("n"))
-        .orderBy("rk")
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-    "t_source_sample" ->
+    },
       """WITH base AS (
            SELECT doc_id, source,
                   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
@@ -540,16 +336,45 @@ object TextQueries {
                 CAST((b.doc_id * 1103515245 + 12345) % 2147483648 AS DOUBLE)
                   < w * 2147483648.0 AS kept
          FROM base b JOIN wt ON wt.source = b.source
-         ORDER BY b.doc_id""",
-    "t_token_stats" ->
+         ORDER BY b.doc_id"""),
+
+    // R20 — per-document token statistics: whitespace tokens, distinct
+    // tokens, lexical diversity, BPE-ish regex token count.
+    QueryDef("t_token_stats", (s, d) =>
+      docs(s, d)
+        .select(
+          col("doc_id"),
+          size(split(col("text"), " ")).as("n_tokens"),
+          size(array_distinct(split(col("text"), " "))).as("n_distinct"),
+          size(regexTokens("text")).as("n_bpe_tokens"),
+          floorRound(size(array_distinct(split(col("text"), " "))).cast("double") /
+                size(split(col("text"), " ")), 4).as("diversity"))
+        .orderBy("doc_id"),
       """SELECT doc_id,
                 CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
                 CAST(len(list_distinct(string_split(text, ' '))) AS INT) AS n_distinct,
                 CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+')) AS INT) AS n_bpe_tokens,
                 floor((CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE) /
                       len(string_split(text, ' '))) * 10000 + 0.5) / 10000 AS diversity
-         FROM documents ORDER BY doc_id""",
-    "t_quality_score" ->
+         FROM documents ORDER BY doc_id"""),
+
+    // R20 — quality scoring: length/stopword/diversity blend. Pure
+    // arithmetic over deterministic counts, mirrored in the oracle
+    // (which hardcodes the same two stopwords — the quality dial keeps
+    // its original list independently of the language-id lexicon).
+    QueryDef("t_quality_score", (s, d) => {
+      val toks = split(col("text"), " ")
+      val nTok = size(toks).cast("double")
+      val stopHits = size(filter(toks, t => t.isin(QualityStopwords: _*))).cast("double")
+      val avgLen = (length(col("text")) - (size(toks) - 1)).cast("double") / nTok
+      docs(s, d)
+        .select(
+          col("doc_id"),
+          floorRound(stopHits / nTok, 4).as("stopword_ratio"),
+          floorRound(avgLen, 4).as("avg_token_len"),
+          qualityBlend.as("quality"))
+        .orderBy("doc_id")
+    },
       """WITH t AS (
            SELECT doc_id,
                   CAST(len(string_split(text, ' ')) AS DOUBLE) AS n_tok,
@@ -564,20 +389,61 @@ object TextQueries {
                 floor((avg_len) * 10000 + 0.5) / 10000 AS avg_token_len,
                 floor((0.5 * diversity + 0.3 * (1.0 - stop_hits / n_tok) +
                       0.2 * least(avg_len / 10.0, 1.0)) * 10000 + 0.5) / 10000 AS quality
-         FROM t ORDER BY doc_id""",
-    "t_lang_id" ->
+         FROM t ORDER BY doc_id"""),
+
+    // R20 — language-id heuristic (marker-token evidence) with accuracy
+    // readout against the labeled lang column. The corpus is synthetic word
+    // soup, so the interesting property is deterministic parity of the
+    // heuristic, which the oracle mirrors token-for-token.
+    QueryDef("t_lang_id", (s, d) => {
+      docs(s, d)
+        .select(col("lang"), langPred.as("lang_pred"))
+        .groupBy(col("lang"), col("lang_pred"))
+        .agg(count(lit(1)).as("n"))
+        .orderBy("lang", "lang_pred")
+    },
       s"""WITH p AS (
            SELECT lang, $langPredSql AS lang_pred
            FROM documents)
          SELECT lang, lang_pred, CAST(count(*) AS BIGINT) AS n
-         FROM p GROUP BY lang, lang_pred ORDER BY lang, lang_pred""",
-    "t_lang_profile" ->
+         FROM p GROUP BY lang, lang_pred ORDER BY lang, lang_pred"""),
+
+    // R20 — corpus profile per language: docs, chars, source spread.
+    QueryDef("t_lang_profile", (s, d) =>
+      docs(s, d)
+        .groupBy(col("lang"))
+        .agg(
+          count(lit(1)).as("n_docs"),
+          sum(col("n_chars")).as("total_chars"),
+          floorRound(avg(col("n_chars")), 2).as("avg_chars"),
+          countDistinct(col("source")).as("n_sources"))
+        .orderBy("lang"),
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
                 CAST(sum(n_chars) AS BIGINT) AS total_chars,
                 floor((avg(n_chars)) * 100 + 0.5) / 100 AS avg_chars,
                 CAST(count(DISTINCT source) AS BIGINT) AS n_sources
-         FROM documents GROUP BY lang ORDER BY lang""",
-    "t_tfidf_top_term" ->
+         FROM documents GROUP BY lang ORDER BY lang"""),
+
+    // R20 — TF-IDF: top term per document. Two aggregations (term counts,
+    // document frequency) and a broadcast-able df join; ordering on the
+    // rounded score so both engines break ties identically.
+    QueryDef("t_tfidf_top_term", (s, d) => {
+      // corpus size as a lazy broadcast scalar (no eager driver-side count)
+      val nDf = docs(s, d).agg(count(lit(1)).cast("double").as("corpus_n"))
+      val tf = docs(s, d)
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
+      val df_ = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      val w = Window.partitionBy(col("doc_id"))
+        .orderBy(col("tfidf").desc, col("term"))
+      tf.join(df_, "term").crossJoin(broadcast(nDf))
+        .withColumn("tfidf",
+          floorRound(col("tf") * log(col("corpus_n") / col("df")), 6))
+        .withColumn("rk", row_number().over(w))
+        .filter(col("rk") === 1)
+        .select(col("doc_id"), col("term").as("top_term"), col("tfidf"))
+        .orderBy("doc_id")
+    },
       """WITH tf AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS term
            FROM documents),
@@ -591,20 +457,55 @@ object TextQueries {
                     ORDER BY floor((tf * ln(n.n / df)) * 1000000 + 0.5) / 1000000 DESC, term) AS rk
            FROM tfc JOIN dfc USING (term) CROSS JOIN n)
          SELECT doc_id, term AS top_term, tfidf
-         FROM scored WHERE rk = 1 ORDER BY doc_id""",
-    "t_fingerprint" ->
+         FROM scored WHERE rk = 1 ORDER BY doc_id"""),
+
+    // R20 — content fingerprints: sha256 (oracle-able, content address) and
+    // shard key prefix for routing at scale.
+    QueryDef("t_fingerprint", (s, d) =>
+      docs(s, d)
+        .select(
+          col("doc_id"),
+          sha256Hex(col("text")).as("sha"),
+          substring(sha256Hex(col("text")), 1, 4).as("shard_key"))
+        .orderBy("doc_id"),
       """SELECT doc_id, sha256(text) AS sha, substring(sha256(text), 1, 4) AS shard_key
-         FROM documents ORDER BY doc_id""",
-    // min-md5 over distinct 5-gram shingles; min over hex strings = min of
-    // the underlying 128-bit hashes, and both engines emit lowercase hex
-    "t_rolling_fingerprint" ->
+         FROM documents ORDER BY doc_id"""),
+
+    // R20 — rolling-hash (winnowing-style) fingerprint over 5-gram
+    // shingles: the minimum hash over the shingle stream is the doc's
+    // near-dup prefilter key. Uses the md5 twin so the fingerprint VALUE is
+    // oracle-able cross-engine (DuckDB computes the identical hex digest);
+    // the xxhash64 production form shares the selection logic and is
+    // spec-tested (TextFunctions.rollingFingerprint).
+    QueryDef("t_rolling_fingerprint", (s, d) => {
+      graft.plans.GraftFunctions.register(s)
+      docs(s, d)
+        .select(col("doc_id"), rollingFingerprintMd5("text").as("fp"))
+        .filter(col("fp").isNotNull)
+        .orderBy("doc_id")
+    },
+      // min-md5 over distinct 5-gram shingles; min over hex strings = min of
+      // the underlying 128-bit hashes, and both engines emit lowercase hex
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
          SELECT doc_id,
                 list_min(list_transform(
                   list_transform(range(1, len(t) - 3), i -> array_to_string(t[i:i+4], ' ')),
                   s -> md5(s))) AS fp
-         FROM toks WHERE len(t) >= 5 ORDER BY doc_id""",
-    "t_decontaminate" ->
+         FROM toks WHERE len(t) >= 5 ORDER BY doc_id"""),
+
+    // R20/R18 — BENCHMARK DECONTAMINATION: the pre-training hygiene step
+    // that drops training documents sharing verbatim n-grams with a
+    // held-out eval set (src0 plays the benchmark here; 5-gram at this
+    // corpus's 10-100-token docs stands in for the usual 13-gram). Scale
+    // shape: the eval gram set is tiny relative to the corpus — it
+    // BROADCASTS, so the training side streams through a broadcast
+    // semi-probe at scan speed and the only shuffle is the per-doc count
+    // on doc_id. Every training doc appears in the output (clean docs
+    // carry n=0), so the result doubles as the keep/drop manifest.
+    QueryDef("t_decontaminate", (s, d) => {
+      graft.plans.GraftFunctions.register(s)
+      decontaminate(docs(s, d), evalSource = "src0")
+    },
       """WITH toks AS (SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
          sh AS (
            SELECT doc_id, source,
@@ -620,8 +521,17 @@ object TextQueries {
                 CAST(coalesce(hits.n, 0) AS BIGINT) AS n_contaminated_grams,
                 coalesce(hits.n, 0) > 0 AS contaminated
          FROM documents d LEFT JOIN hits USING (doc_id)
-         WHERE d.source <> 'src0' ORDER BY d.doc_id""",
-    "t_repetition" ->
+         WHERE d.source <> 'src0' ORDER BY d.doc_id"""),
+
+    // R20 — INTRA-DOCUMENT REPETITION (the Gopher/C4-style quality rule
+    // that drops looping generations and boilerplate): duplicate-2-gram
+    // fraction per doc plus the top-token dominance share. Pure per-row
+    // expressions + one (doc, token) count — linear, shuffle on doc_id
+    // only, no cross-doc interaction at all.
+    QueryDef("t_repetition", (s, d) => {
+      graft.plans.GraftFunctions.register(s)
+      repetition(docs(s, d))
+    },
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
          g AS (SELECT doc_id,
                       greatest(len(t) - 1, 0) AS total_2grams,
@@ -641,8 +551,20 @@ object TextQueries {
                 floor(dup_f * 10000 + 0.5) / 10000 AS dup_2gram_frac,
                 floor(top_f * 10000 + 0.5) / 10000 AS top_token_frac,
                 (dup_f > 0.1 OR top_f > 0.25) AS repetitive
-         FROM f ORDER BY doc_id""",
-    "t_perplexity_proxy" ->
+         FROM f ORDER BY doc_id"""),
+
+    // R20 — PERPLEXITY-PROXY quality filter: per-doc average negative log
+    // probability under the corpus's own unigram model, the cheap-LM
+    // stand-in for perplexity filtering (docs far from the corpus
+    // distribution score high and get flagged). Integer 1e-4-unit
+    // arithmetic end-to-end, so the oracle replays it exactly and the
+    // per-doc sum is partition-order independent. Scale shape: the
+    // unigram model is two broadcastable aggregates; the token stream
+    // joins it broadcast and aggregates on doc_id — linear, one explode
+    // shuffle. The 34300-unit dial (avg nll ≈ 3.43 nats) sits just past
+    // this corpus's p95, so the flagged set is the genuine tail.
+    QueryDef("t_perplexity_proxy", (s, d) =>
+      perplexityProxy(docs(s, d), unusualUnits = 34300L),
       """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
          uni AS (SELECT t, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY t),
          tot AS (SELECT CAST(sum(c) AS DOUBLE) AS total FROM uni),
@@ -651,8 +573,22 @@ object TextQueries {
          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
                 CAST(sum(u) AS BIGINT) AS nll_units,
                 sum(u) > count(*) * 34300 AS unusual
-         FROM u GROUP BY doc_id ORDER BY doc_id""",
-    "t_char_entropy" ->
+         FROM u GROUP BY doc_id ORDER BY doc_id"""),
+
+    // R20 — CHARACTER-ENTROPY quality signal (the gibberish/garbage gate:
+    // mojibake, binary spills, and single-char floods all show up as an
+    // entropy outlier). Shannon entropy over the doc's character
+    // distribution, computed entirely PER ROW with higher-order functions —
+    // char histogram via filter-counts over the distinct alphabet (k ≈
+    // alphabet size, so O(k·n) per doc), Σ c·ln(c) floor-rounded to integer
+    // 1e-4 units term-by-term BEFORE the sum (the same order-independent
+    // integer-unit trick as t_perplexity_proxy), then
+    // H = ln(N) − S/(N·1e4) emitted in the same units. ZERO shuffle: a
+    // per-document function should never move data — this is the plan at
+    // any scale. The 27000-unit dial sits at this corpus's p05, so the
+    // flagged set is the genuine low tail.
+    QueryDef("t_char_entropy", (s, d) =>
+      charEntropy(docs(s, d), lowUnits = 27000L),
       """WITH d AS (SELECT doc_id, regexp_extract_all(text, '.') AS chars
                     FROM documents),
          m AS (
@@ -673,24 +609,71 @@ object TextQueries {
          SELECT doc_id, n AS n_chars, k AS n_distinct_chars,
                 CAST(s AS BIGINT) AS clogc_units, entropy_units,
                 entropy_units < 27000 AS low_entropy
-         FROM e ORDER BY doc_id""",
-    "t_heavy_hitters" ->
-      """WITH c AS (
-           SELECT t AS term, CAST(count(*) AS BIGINT) AS n
-           FROM (SELECT unnest(string_split(text, ' ')) AS t FROM documents)
-           GROUP BY t)
-         SELECT CAST(row_number() OVER (ORDER BY n DESC, term) AS INT) AS rk, term, n
-         FROM c ORDER BY n DESC, term LIMIT 10""",
-    // sketch-vs-exact: DuckDB derives the exact top-10 independently; the
-    // CMS estimate itself is engine-internal, so only its theory bounds
-    // are hashed (the d_source_overlap / q_hll_union discipline)
-    "t_cms_heavy_hitters" ->
+         FROM e ORDER BY doc_id"""),
+
+    // R20/R9 — heavy hitters through a COUNT-MIN SKETCH, the streaming/
+    // mergeable form of t_heavy_hitters and the fourth member of the
+    // sketch family (HLL: q_hll_union, MinHash: d_source_overlap, bitmap:
+    // q_bitmap_distinct): the corpus aggregates into ONE fixed-size CMS
+    // (Spark's count_min_sketch — map-side partial sketches merge, the
+    // shuffle carries sketches not rows), which the exact top-10 then
+    // probes via the native graft_cms_est (Spark ships the build side but
+    // no SQL probe — without it, reading an estimate means collecting the
+    // sketch to the driver). Oracled sketch-vs-exact like the others: the
+    // hashed columns are the exact counts plus the two CMS theory bounds
+    // (est ≥ true always; est ≤ true + eps·N at the sketch's confidence —
+    // eps·N ≈ 25 tokens here while a colliding counter needs all 7 rows
+    // to collide at ~2e-3 each, so the bound sits ~19 orders of magnitude
+    // above the failure odds). At 100 TB the sketch is the only state
+    // that moves: 20k×7 longs regardless of corpus size.
+    QueryDef("t_cms_heavy_hitters", (s, d) => {
+      graft.plans.GraftFunctions.register(s)
+      val toks = docs(s, d).select(explode(split(col("text"), " ")).as("term"))
+      val counts = toks.groupBy(col("term")).agg(count(lit(1)).as("n"))
+      val sketch = toks.agg(
+        expr("count_min_sketch(term, 0.0001d, 0.99d, 42)").as("cms"),
+        count(lit(1)).as("total"))
+      graft.plans.TopK.perKey(counts, keys = Seq(),
+          order = Seq(graft.plans.TopK.Ord("n", desc = true),
+                      graft.plans.TopK.Ord("term")), k = 10)
+        .crossJoin(broadcast(sketch))
+        .select(col("rk"), col("term"), col("n"),
+          (expr("graft_cms_est(cms, term)") >= col("n")).as("cms_ge_true"),
+          (expr("graft_cms_est(cms, term)") <=
+            col("n") + ceil(col("total") * lit(0.0001)).cast(LongType))
+            .as("cms_within_eps"))
+        .orderBy("rk")
+    },
+      // sketch-vs-exact: DuckDB derives the exact top-10 independently; the
+      // CMS estimate itself is engine-internal, so only its theory bounds
+      // are hashed (the d_source_overlap / q_hll_union discipline)
       """WITH c AS (
            SELECT t AS term, CAST(count(*) AS BIGINT) AS n
            FROM (SELECT unnest(string_split(text, ' ')) AS t FROM documents)
            GROUP BY t)
          SELECT CAST(row_number() OVER (ORDER BY n DESC, term) AS INT) AS rk, term, n,
                 TRUE AS cms_ge_true, TRUE AS cms_within_eps
-         FROM c ORDER BY n DESC, term LIMIT 10"""
+         FROM c ORDER BY n DESC, term LIMIT 10"""),
+
+    // R20/R10 — corpus heavy hitters (boilerplate detection): top-10 tokens
+    // by frequency through the GLOBAL TopKPerKey path (empty grouping →
+    // AllTuples distribution: per-partition heaps, single k-row merge — the
+    // vocabulary never needs a full sort).
+    QueryDef("t_heavy_hitters", (s, d) => {
+      val counts = docs(s, d)
+        .select(explode(split(col("text"), " ")).as("term"))
+        .groupBy(col("term")).agg(count(lit(1)).as("n"))
+      graft.plans.TopK.perKey(counts, keys = Seq(),
+          order = Seq(graft.plans.TopK.Ord("n", desc = true),
+                      graft.plans.TopK.Ord("term")), k = 10)
+        .select(col("rk"), col("term"), col("n"))
+        .orderBy("rk")
+    },
+      """WITH c AS (
+           SELECT t AS term, CAST(count(*) AS BIGINT) AS n
+           FROM (SELECT unnest(string_split(text, ' ')) AS t FROM documents)
+           GROUP BY t)
+         SELECT CAST(row_number() OVER (ORDER BY n DESC, term) AS INT) AS rk, term, n
+         FROM c ORDER BY n DESC, term LIMIT 10""")
   )
 }

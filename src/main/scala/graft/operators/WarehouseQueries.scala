@@ -217,34 +217,11 @@ object WarehouseQueries {
       .orderBy("user_id")
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[QueryDef] = Seq(
     // R7/R12-adjacent — robust (median/MAD) outlier monitoring: the
     // heavy-tail-safe twin of r_zscore_outliers. Stats frame broadcast;
     // PlanSpec pins broadcasts + event_type-only exchanges.
-    "r_anomaly_mad" -> ((s, d) => madOutliers(Tables.events(s, d))),
-
-    // R13-adjacent — CUSUM level-shift changepoint per type on the daily
-    // series; exact integer-unit running sums (window-aggregation-order
-    // immune), day-grain pre-agg before any window.
-    "r_changepoint_cusum" -> ((s, d) => changepoint(Tables.events(s, d))),
-
-    // §4-adjacent — Z-order layout audit: Morton-code bucketing of orders
-    // on (custkey, order-day) with per-bucket span stats — the data-
-    // skipping evidence for multi-dimensional clustering. All-integer.
-    "q_zorder_cluster" -> ((s, d) => zorderCluster(Tables.orders(s, d))),
-
-    // R6/R17-adjacent — SCD type-2 history build over order status:
-    // run-collapse via fused windows, custkey-partitioned end to end.
-    "q_scd2_orders" -> ((s, d) => scd2(Tables.orders(s, d))),
-
-    // R6-adjacent — CDC MERGE-apply: event log → final per-user snapshot
-    // in log-ordinal order (insert/update/delete fold as conditional
-    // window cuts); one user_id exchange end to end, integer-unit sums.
-    "r_cdc_merge" -> ((s, d) => cdcMergeApply(Tables.events(s, d)))
-  )
-
-  val oracles: Map[String, String] = Map(
-    "r_anomaly_mad" ->
+    QueryDef("r_anomaly_mad", (s, d) => madOutliers(Tables.events(s, d)),
       s"""WITH med AS (
             SELECT event_type, ${floorRoundSql("median(value)", 4)} AS med
             FROM events GROUP BY event_type),
@@ -261,8 +238,12 @@ object WarehouseQueries {
                                THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
           FROM events e JOIN st USING (event_type)
           GROUP BY e.event_type, st.med, st.mad
-          ORDER BY event_type""",
-    "r_changepoint_cusum" ->
+          ORDER BY event_type"""),
+
+    // R13-adjacent — CUSUM level-shift changepoint per type on the daily
+    // series; exact integer-unit running sums (window-aggregation-order
+    // immune), day-grain pre-agg before any window.
+    QueryDef("r_changepoint_cusum", (s, d) => changepoint(Tables.events(s, d)),
       """WITH daily AS (
            SELECT event_type, CAST(ts AS DATE) AS day,
                   CAST(count(*) AS BIGINT) AS cnt
@@ -286,8 +267,12 @@ object WarehouseQueries {
            FROM cs)
          SELECT event_type, n_days, day AS cp_day,
                 CAST(mac AS BIGINT) AS max_abs_cusum_units
-         FROM r WHERE rk = 1 ORDER BY event_type""",
-    "q_zorder_cluster" ->
+         FROM r WHERE rk = 1 ORDER BY event_type"""),
+
+    // §4-adjacent — Z-order layout audit: Morton-code bucketing of orders
+    // on (custkey, order-day) with per-bucket span stats — the data-
+    // skipping evidence for multi-dimensional clustering. All-integer.
+    QueryDef("q_zorder_cluster", (s, d) => zorderCluster(Tables.orders(s, d)),
       """WITH dims AS (
            SELECT CAST(o_custkey AS BIGINT) AS ck,
                   CAST(date_diff('day', DATE '1970-01-01',
@@ -316,8 +301,11 @@ object WarehouseQueries {
          SELECT bucket, CAST(count(*) AS BIGINT) AS n,
                 min(x) AS x_min, max(x) AS x_max, max(x) - min(x) AS x_span,
                 min(y) AS y_min, max(y) AS y_max, max(y) - min(y) AS y_span
-         FROM z GROUP BY bucket ORDER BY bucket""",
-    "q_scd2_orders" ->
+         FROM z GROUP BY bucket ORDER BY bucket"""),
+
+    // R6/R17-adjacent — SCD type-2 history build over order status:
+    // run-collapse via fused windows, custkey-partitioned end to end.
+    QueryDef("q_scd2_orders", (s, d) => scd2(Tables.orders(s, d)),
       """WITH base AS (
            SELECT o_custkey AS custkey, o_orderkey,
                   CAST(o_orderdate AS DATE) AS od, o_orderstatus AS status
@@ -342,11 +330,15 @@ object WarehouseQueries {
                 n_orders,
                 CASE WHEN lead(valid_from) OVER (PARTITION BY custkey ORDER BY run) IS NULL
                      THEN 1 ELSE 0 END AS is_current
-         FROM seg ORDER BY custkey, seq""",
-    // WHERE is evaluated before window functions in the same SELECT, so
-    // the live_since window in `alive` sees only post-tombstone rows —
-    // the same order the Spark side's filter-then-window enforces.
-    "r_cdc_merge" ->
+         FROM seg ORDER BY custkey, seq"""),
+
+    // R6-adjacent — CDC MERGE-apply: event log → final per-user snapshot
+    // in log-ordinal order (insert/update/delete fold as conditional
+    // window cuts); one user_id exchange end to end, integer-unit sums.
+    QueryDef("r_cdc_merge", (s, d) => cdcMergeApply(Tables.events(s, d)),
+      // WHERE is evaluated before window functions in the same SELECT, so
+      // the live_since window in `alive` sees only post-tombstone rows —
+      // the same order the Spark side's filter-then-window enforces.
       """WITH cut AS (
            SELECT user_id, event_id, event_type, value,
                   max(CASE WHEN event_type = 'error' THEN event_id END)
@@ -367,6 +359,6 @@ object WarehouseQueries {
                 CAST(sum(CASE WHEN event_type = 'purchase'
                               THEN CAST(floor(value * 10000) AS BIGINT)
                               ELSE 0 END) AS BIGINT) AS purchase_units
-         FROM app GROUP BY user_id ORDER BY user_id"""
+         FROM app GROUP BY user_id ORDER BY user_id""")
   )
 }

@@ -255,7 +255,7 @@ final class ServiceShell(
         }
       case ("GET", "/event-stream") =>
         val items = registry.list().map(r =>
-          s"""{"id":${r.id},"routing_key":"${jsonEscape(r.routingKey)}","location":"$wsScheme://127.0.0.1:$wsPort/event-stream/${r.uuid}"}""")
+          s"""{"id":${r.id},"routing_key":"${graft.Json.escape(r.routingKey)}","location":"$wsScheme://127.0.0.1:$wsPort/event-stream/${r.uuid}"}""")
         respond(ex, 200, items.mkString("[", ",", "]"))
       case ("DELETE", IdPath(id)) =>
         // fence-then-row ordering lives in registry.delete; the socket (if
@@ -806,25 +806,7 @@ object ServiceShell {
     */
   private val MaxHttpBody: Int = 1 << 20
 
-  /** JSON string escape for values interpolated into hand-built response
-    * bodies — a routing key containing `"` or `\` (or a control char) must
-    * not produce invalid JSON (ADVICE r10).
-    */
-  private[streaming] def jsonEscape(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"'           => sb.append("\\\"")
-      case '\\'          => sb.append("\\\\")
-      case '\n'          => sb.append("\\n")
-      case '\r'          => sb.append("\\r")
-      case '\t'          => sb.append("\\t")
-      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-      case c             => sb.append(c)
-    }
-    sb.toString
-  }
-
-  /** Inverse of [[jsonEscape]] for the request-body parse. */
+  /** Inverse of [[graft.Json.escape]] for the request-body parse. */
   private[streaming] def jsonUnescape(s: String): String = {
     val sb = new StringBuilder(s.length)
     var i = 0

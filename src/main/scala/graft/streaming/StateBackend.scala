@@ -22,11 +22,11 @@ import org.apache.spark.sql.SparkSession
   *
   * The knob is a session conf consumed when a streaming query STARTS, so
   * it cannot be a per-query option on our operator surface; callers opt a
-  * session in before `start()`. Bench honors `SPARK_GRAFT_STATE_BACKEND=
-  * rocksdb` so the backend's throughput cost is measurable round-over-round
-  * on the same harness (sf0.1 state fits heap, so the default stays the
-  * faster in-memory provider there; the RocksDB path is correctness-pinned
-  * by StateBackendSpec — equal results, rocksdb metrics present).
+  * session in before `start()`. `StreamProbe <sfDir> <pipeline|join>
+  * [runs] rocksdb` measures the backend's throughput cost against the
+  * default (sf0.1 state fits heap, so the default stays the faster
+  * in-memory provider there; the RocksDB path is correctness-pinned by
+  * StateBackendSpec — equal results, rocksdb metrics present).
   *
   * MEASURED crossover (BASELINE.md round-17 state-crossover section;
   * `StreamProbe state`, 16 × 500k fresh keys, 8 partitions): at

@@ -401,48 +401,6 @@ object StreamingAggs {
       }
   }
 
-  /** [[statsEveryN]] on the state-v2 `transformWithState` API (Spark 4):
-    * the same per-key counters as a typed [[ValueState]] managed by a
-    * [[StatefulProcessor]]. The operational win at scale is the state
-    * store contract: state-v2 requires RocksDB, whose changelog
-    * checkpointing and compaction keep O(#streams) state off the executor
-    * heap, and TTL (here NONE — counters live for the stream's lifetime)
-    * is declared per state variable instead of hand-rolled timeouts.
-    */
-  final class StatsEveryNProcessor(every: Int)
-      extends StatefulProcessor[String, (String, Boolean), StreamStats] {
-    require(every > 0, s"emit interval must be positive, got $every")
-    @transient private var counters: ValueState[(Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counters = getHandle.getValueState[(Long, Long)](
-        "counters", Encoders.product[(Long, Long)], TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[(String, Boolean)],
-        timerValues: TimerValues): Iterator[StreamStats] = {
-      var (received, sent) = if (counters.exists()) counters.get() else (0L, 0L)
-      val out = scala.collection.mutable.ArrayBuffer.empty[StreamStats]
-      rows.foreach { case (_, forward) =>
-        received += 1
-        if (forward) sent += 1
-        if (received % every == 0) out += StreamStats(key, received, sent)
-      }
-      counters.update((received, sent))
-      out.iterator
-    }
-  }
-
-  /** T4 via transformWithState — requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`).
-    */
-  def statsEveryNTws(keyed: Dataset[(String, Boolean)], every: Int): Dataset[StreamStats] = {
-    import keyed.sparkSession.implicits._
-    keyed.groupByKey(_._1)
-      .transformWithState(new StatsEveryNProcessor(every), TimeMode.None(), OutputMode.Append())
-  }
-
   /** Emitted by [[sessionTimeouts]] when a stream goes quiet for the gap. */
   final case class SessionClosed(routingKey: String, nEvents: Long, lastMs: Long)
 
@@ -450,9 +408,8 @@ object StreamingAggs {
     * key at (last event + gap); each new event slides it. When the
     * watermark passes the timer, the session closes and its summary is
     * emitted — the streaming analog of the reference's per-connection
-    * teardown (a consumer that stops hearing traffic), and the third leg
-    * of the state-v2 API (value state + timers + TTL) after
-    * [[StatsEveryNProcessor]]. State is O(#streams): one (count, lastMs)
+    * teardown (a consumer that stops hearing traffic), on the state-v2
+    * API (value state + timers). State is O(#streams): one (count, lastMs)
     * pair and one registered timer per key, reclaimed on emit.
     */
   final class SessionTimeoutProcessor(gapMs: Long)

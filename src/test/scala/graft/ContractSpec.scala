@@ -24,6 +24,25 @@ class ContractSpec extends SparkSpec {
     assert(SparkEntry.oracleSql.size >= 30)
   }
 
+  test("a query name registered twice fails the registry by name") {
+    val q = SparkEntry.registry.head
+    val ex = intercept[IllegalArgumentException] {
+      SparkEntry.unique(SparkEntry.registry :+ q.copy(oracleSql = "SELECT 1"))
+    }
+    assert(ex.getMessage.contains(q.name))
+    assert(SparkEntry.registry.size === SparkEntry.queries.size)
+  }
+
+  test("Spark's own AQE coalesce floor is the 1 MB the bench session relies on") {
+    // GraftSession leaves spark.sql.adaptive.coalescePartitions
+    // .minPartitionSize unset and relies on Spark's default being the 1m
+    // floor the r22 A/B chose; a Spark whose default moves would change
+    // every bench plan, so it fails here first
+    import org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    val floor = spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    assert(byteStringAsBytes(floor) === byteStringAsBytes("1m"))
+  }
+
   test("flagship entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -52,9 +52,11 @@ class DataQualitySpec extends SparkSpec {
       .select("k", "rk", "id").orderBy("k", "rk")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
     val w = Window.partitionBy($"k").orderBy($"score".desc, $"id")
-    val window = withNulls
+    val windowDf = withNulls
       .withColumn("rk", row_number().over(w)).filter($"rk" <= 2)
       .select("k", "rk", "id").orderBy("k", "rk")
+    assert(windowDf.queryExecution.optimizedPlan.collect { case t: TopKPerKey => t }.isEmpty)
+    val window = windowDf
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
     assert(native === window)
   }
@@ -65,6 +67,7 @@ class DataQualitySpec extends SparkSpec {
     val w = Window.partitionBy($"l_orderkey")
       .orderBy(($"l_extendedprice" * (lit(1) - $"l_discount")).desc, $"l_extendedprice")
     val df = base.withColumn("rk", row_number().over(w)).filter($"rk" <= 2)
+    assert(df.queryExecution.optimizedPlan.collect { case t: TopKPerKey => t }.isEmpty)
     val rewritten = TopKRewriteRule(df.queryExecution.optimizedPlan)
     assert(rewritten.collect { case t: TopKPerKey => t }.nonEmpty)
     if (!spark.experimental.extraStrategies.contains(TopKStrategy))

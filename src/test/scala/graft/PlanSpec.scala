@@ -9,6 +9,21 @@ class PlanSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, d).queryExecution.executedPlan.toString
 
+  /** Runs `body` with the window top-k rewrite installed, as Bench and
+    * Verify run, then restores the shared session's optimizer rules and
+    * strategies so later suites keep their un-rewritten plans.
+    */
+  private def withTopKRewrite[T](body: => T): T = {
+    val (rules, strategies) =
+      (spark.experimental.extraOptimizations, spark.experimental.extraStrategies)
+    graft.plans.TopKRewrite.enable(spark)
+    try body
+    finally {
+      spark.experimental.extraOptimizations = rules
+      spark.experimental.extraStrategies = strategies
+    }
+  }
+
   test("q_star_join: dimensions broadcast, no cartesian product") {
     val p = plan("q_star_join")
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 3, p.take(800))
@@ -180,8 +195,7 @@ class PlanSpec extends SparkSpec {
     // the only corpus-sized exchange allowed is TopKPerKey's own
     // (already pruned to ≤ k rows per partition); the probe fan-out is a
     // broadcast join, never a shuffle join
-    graft.plans.TopKRewrite.enable(spark)
-    val p = plan("v_ivfpq_batch")
+    val p = withTopKRewrite(plan("v_ivfpq_batch"))
     assert(p.contains("TopKPerKey"), p.take(1000))
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
       p.take(1000))

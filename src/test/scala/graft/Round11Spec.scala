@@ -29,7 +29,7 @@ class Round11Spec extends SparkSpec {
   }
 
   test("t_classifier_score: kept iff positive units; score bounded in [-1,1]") {
-    val out = Round11Queries.defs("t_classifier_score")(spark, sf).collect()
+    val out = SparkEntry.queries("t_classifier_score")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val units = r.getAs[Long]("score_units")
@@ -42,8 +42,8 @@ class Round11Spec extends SparkSpec {
   // ---- q_approx_groupby_ci -------------------------------------------
 
   test("q_approx_groupby_ci: deterministic sample, ~10% rate, sane CI") {
-    val a = Round11Queries.defs("q_approx_groupby_ci")(spark, sf).collect()
-    val b = Round11Queries.defs("q_approx_groupby_ci")(spark, sf).collect()
+    val a = SparkEntry.queries("q_approx_groupby_ci")(spark, sf).collect()
+    val b = SparkEntry.queries("q_approx_groupby_ci")(spark, sf).collect()
     assert(a.toSeq === b.toSeq) // reproducible across runs — the HT refresh property
     val nSampled = a.map(_.getAs[Long]("n_sampled")).sum.toDouble
     val total = Tables.lineitem(spark, sf).count().toDouble
@@ -73,14 +73,14 @@ class Round11Spec extends SparkSpec {
       "inclusion-exclusion estimate outside 5%-of-(|A|+|B|) — probabilistic " +
         "bound violated; check bound width before treating as a bug")
     // the oracled projection stays exact-only
-    val cols = Round11Queries.defs("q_hll_intersect")(spark, sf).columns.toSeq
+    val cols = SparkEntry.queries("q_hll_intersect")(spark, sf).columns.toSeq
     assert(cols === Seq("exact_a", "exact_b", "exact_inter"))
   }
 
   // ---- q_entity_resolution -------------------------------------------
 
   test("q_entity_resolution: pairs stay within blocks and cover C(n,2)") {
-    val out = Round11Queries.defs("q_entity_resolution")(spark, sf)
+    val out = SparkEntry.queries("q_entity_resolution")(spark, sf)
     val pairs = out.collect()
     assert(pairs.nonEmpty)
     // block key is the trailing noun of both names
@@ -122,14 +122,14 @@ class Round11Spec extends SparkSpec {
   test("q_hll_intersect: the exact triple is consistent") {
     // the oracled query projects only the exact columns; the sketch bound
     // flags live in hllIntersectAudit (asserted above) — ADVICE r11
-    val r = Round11Queries.defs("q_hll_intersect")(spark, sf).head()
+    val r = SparkEntry.queries("q_hll_intersect")(spark, sf).head()
     val (a, b, i) = (r.getAs[Long]("exact_a"), r.getAs[Long]("exact_b"),
       r.getAs[Long]("exact_inter"))
     assert(i <= math.min(a, b) && i >= 0)
   }
 
   test("r_rollup_delta: merged partials are lossless and cover every event") {
-    val rows = Round11Queries.defs("r_rollup_delta")(spark, sf).collect()
+    val rows = SparkEntry.queries("r_rollup_delta")(spark, sf).collect()
     assert(rows.nonEmpty)
     assert(rows.forall(_.getAs[Boolean]("matches_full")))
     val total = rows.map(_.getAs[Long]("cnt")).sum
@@ -153,7 +153,7 @@ class Round11Spec extends SparkSpec {
   }
 
   test("t_bpe_apply: merges only shrink and always reverse on the corpus") {
-    val rows = Round11Queries.defs("t_bpe_apply")(spark, sf).collect()
+    val rows = SparkEntry.queries("t_bpe_apply")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Boolean]("reversible"))
@@ -166,7 +166,7 @@ class Round11Spec extends SparkSpec {
   // ---- d_dedup_keep_best ---------------------------------------------
 
   test("d_dedup_keep_best: kept member maximizes score within its cluster") {
-    val rows = Round11Queries.defs("d_dedup_keep_best")(spark, sf).collect()
+    val rows = SparkEntry.queries("d_dedup_keep_best")(spark, sf).collect()
     assert(rows.nonEmpty)
     // memberships from the registered cluster census; scores from the
     // registered classifier — two independent oracled queries
@@ -174,7 +174,7 @@ class Round11Spec extends SparkSpec {
       .filter(col("cluster_size") > 1)
       .collect().map(r => (r.getAs[Long]("cluster_id"), r.getAs[Long]("doc_id")))
       .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).toSeq }
-    val scores = Round11Queries.defs("t_classifier_score")(spark, sf)
+    val scores = SparkEntry.queries("t_classifier_score")(spark, sf)
       .select(col("doc_id"), col("score_units")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(rows.map(_.getAs[Long]("cluster_id")).toSet === members.keySet)
@@ -197,7 +197,7 @@ class Round11Spec extends SparkSpec {
   // ---- d_corpus_build_v3 ---------------------------------------------
 
   test("d_corpus_build_v3: survivors match an independent Scala fold") {
-    val out = Round11Queries.defs("d_corpus_build_v3")(spark, sf)
+    val out = SparkEntry.queries("d_corpus_build_v3")(spark, sf)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     // independent replay: gate by classifier score, cluster gated adjacents
     // at jaccard >= 0.5 (rounded as the engine rounds), keep the argmax
@@ -205,7 +205,7 @@ class Round11Spec extends SparkSpec {
       .select(col("doc_id"), col("source"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
       .sortBy(_._1)
-    val scores = Round11Queries.defs("t_classifier_score")(spark, sf)
+    val scores = SparkEntry.queries("t_classifier_score")(spark, sf)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("score_units"))
       .toMap
     val gated = docs.filter(d => scores(d._1) > 0)
@@ -241,7 +241,7 @@ class Round11Spec extends SparkSpec {
   // ---- q_impute_group_median -----------------------------------------
 
   test("q_impute_group_median: fills only nulls, from the user's own median") {
-    val rows = Round11Queries.defs("q_impute_group_median")(spark, sf).collect()
+    val rows = SparkEntry.queries("q_impute_group_median")(spark, sf).collect()
     assert(rows.length.toLong === Tables.events(spark, sf).count())
     assert(rows.exists(_.getAs[Boolean]("was_imputed")), "errors must exist")
     rows.foreach { r =>
@@ -258,7 +258,7 @@ class Round11Spec extends SparkSpec {
   // ---- t_eval_prf ----------------------------------------------------
 
   test("t_eval_prf: metrics recompute from the registered confusion matrix") {
-    val rows = Round11Queries.defs("t_eval_prf")(spark, sf).collect()
+    val rows = SparkEntry.queries("t_eval_prf")(spark, sf).collect()
       .map(r => r.getAs[String]("cls") -> r).toMap
     val cm = SparkEntry.queries("t_lang_id")(spark, sf).collect()
       .map(r => (r.getAs[String]("lang"), r.getAs[String]("lang_pred"),
@@ -292,7 +292,7 @@ class Round11Spec extends SparkSpec {
   // ---- d_epoch_shuffle -----------------------------------------------
 
   test("d_epoch_shuffle: per-epoch permutation, distinct orders, resumable") {
-    val rows = Round11Queries.defs("d_epoch_shuffle")(spark, sf).collect()
+    val rows = SparkEntry.queries("d_epoch_shuffle")(spark, sf).collect()
     val nDocs = Tables.documents(spark, sf).count()
     val byEpoch = rows.groupBy(_.getAs[Int]("epoch"))
     assert(byEpoch.keySet === Set(0, 1, 2))
@@ -323,7 +323,7 @@ class Round11Spec extends SparkSpec {
     assert(preserved < orders(0).length / 20,
       s"epoch 1 preserves $preserved of ${orders(0).length - 1} epoch-0 adjacencies — rotation-like")
     // determinism: a second run yields the identical schedule
-    val again = Round11Queries.defs("d_epoch_shuffle")(spark, sf).collect()
+    val again = SparkEntry.queries("d_epoch_shuffle")(spark, sf).collect()
     assert(again.map(_.toSeq).toSeq === rows.map(_.toSeq).toSeq)
   }
 
@@ -341,7 +341,7 @@ class Round11Spec extends SparkSpec {
   }
 
   test("q_benford: full digit coverage, share accounting, honest verdict") {
-    val rows = Round11Queries.defs("q_benford")(spark, sf).collect()
+    val rows = SparkEntry.queries("q_benford")(spark, sf).collect()
     assert(rows.map(_.getAs[Int]("digit")).toSeq === (1 to 9))
     assert(rows.map(_.getAs[Long]("cnt")).sum ===
       Tables.orders(spark, sf).count())
@@ -357,7 +357,7 @@ class Round11Spec extends SparkSpec {
   // ---- q_trending_rank_delta -----------------------------------------
 
   test("q_trending_rank_delta: boards are exact top-5, movement is consistent") {
-    val rows = Round11Queries.defs("q_trending_rank_delta")(spark, sf).collect()
+    val rows = SparkEntry.queries("q_trending_rank_delta")(spark, sf).collect()
     assert(rows.nonEmpty)
     val byMonth = rows.groupBy(_.getAs[java.sql.Date]("month").toString)
     byMonth.values.foreach { board =>
@@ -386,8 +386,8 @@ class Round11Spec extends SparkSpec {
   // ---- r_drift_seasonal ----------------------------------------------
 
   test("r_drift_seasonal: weekday baseline absorbs rhythm the daily diff flags") {
-    val seasonal = Round11Queries.defs("r_drift_seasonal")(spark, sf).collect()
-    val daily = Round11Queries.defs("r_drift_detect")(spark, sf).collect()
+    val seasonal = SparkEntry.queries("r_drift_seasonal")(spark, sf).collect()
+    val daily = SparkEntry.queries("r_drift_detect")(spark, sf).collect()
     // first full week has no same-weekday prior: 7 fewer rows than days
     val nDays = Tables.events(spark, sf)
       .select(to_date(col("ts"))).distinct().count()
@@ -407,7 +407,7 @@ class Round11Spec extends SparkSpec {
   // ---- r_concurrency_curve -------------------------------------------
 
   test("r_concurrency_curve: sweep-line conservation and peak flag") {
-    val rows = Round11Queries.defs("r_concurrency_curve")(spark, sf).collect()
+    val rows = SparkEntry.queries("r_concurrency_curve")(spark, sf).collect()
     assert(rows.nonEmpty)
     val starts = rows.map(_.getAs[Long]("n_start")).sum
     val ends = rows.map(_.getAs[Long]("n_end")).sum
@@ -428,7 +428,7 @@ class Round11Spec extends SparkSpec {
   // ---- r_drift_detect ------------------------------------------------
 
   test("r_drift_detect: covers every day but the first; flag tracks the metric") {
-    val rows = Round11Queries.defs("r_drift_detect")(spark, sf).collect()
+    val rows = SparkEntry.queries("r_drift_detect")(spark, sf).collect()
     val nDays = Tables.events(spark, sf)
       .select(to_date(col("ts")).as("day")).distinct().count()
     assert(rows.length.toLong === nDays - 1, "one row per day after the first")
@@ -483,7 +483,7 @@ class Round11Spec extends SparkSpec {
   // ---- v_pca_power ---------------------------------------------------
 
   test("v_pca_power: renorm keeps unit scale; iteration contracts the delta") {
-    val rows = Round11Queries.defs("v_pca_power")(spark, sf).collect()
+    val rows = SparkEntry.queries("v_pca_power")(spark, sf).collect()
     assert(rows.length === 64)
     val maxAbs = rows.map(r => math.abs(r.getAs[Long]("v_unit"))).max
     // after renorm by d = max|w| div 1e6 the peak sits in [1e6, ~2e6)
@@ -509,7 +509,7 @@ class Round11Spec extends SparkSpec {
       .filter(size(col("embedding")) === 64)
       .selectExpr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q")
       .collect().map(_.getSeq[Long](0).toArray)
-    val coords = Round11Queries.defs("v_whiten_project")(spark, sf)
+    val coords = SparkEntry.queries("v_whiten_project")(spark, sf)
       .collect().map(_.getAs[Long]("coord_units"))
     val vNorm2 = axis.map(v => v.toDouble * v).sum
     val projEnergy = coords.map(c => c.toDouble * c).sum / vNorm2
@@ -526,7 +526,7 @@ class Round11Spec extends SparkSpec {
   // ---- v_quantile_norm -----------------------------------------------
 
   test("v_quantile_norm: each dim is a 0..10000 permutation preserving order") {
-    val rows = Round11Queries.defs("v_quantile_norm")(spark, sf).collect()
+    val rows = SparkEntry.queries("v_quantile_norm")(spark, sf).collect()
     val byDim = rows.groupBy(_.getAs[Int]("dim"))
     assert(byDim.size === 64)
     val raw = Tables.embeddings(spark, sf)
@@ -553,7 +553,7 @@ class Round11Spec extends SparkSpec {
   // ---- r_resample_gapfill --------------------------------------------
 
   test("r_resample_gapfill: complete grid, LOCF semantics, gap flags") {
-    val out = Round11Queries.defs("r_resample_gapfill")(spark, sf).collect()
+    val out = SparkEntry.queries("r_resample_gapfill")(spark, sf).collect()
     val ev = Tables.events(spark, sf)
     val users = ev.select("user_id").distinct().count()
     val days = ev.agg(

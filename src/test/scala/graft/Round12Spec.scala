@@ -14,13 +14,13 @@ class Round12Spec extends SparkSpec {
   // ---- q_hash_split ---------------------------------------------------
 
   test("q_hash_split: deterministic, covers the corpus, ~80/10/10") {
-    val rows = Round12Queries.defs("q_hash_split")(spark, sf).collect()
+    val rows = SparkEntry.queries("q_hash_split")(spark, sf).collect()
     val bySplit = rows.map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(bySplit.keySet.subsetOf(Set("train", "val", "test")))
     val total = Tables.documents(spark, sf).count()
     assert(bySplit.values.sum === total, "splits must partition the corpus")
     // deterministic: a second run lands identically (pure function of id)
-    val again = Round12Queries.defs("q_hash_split")(spark, sf).collect()
+    val again = SparkEntry.queries("q_hash_split")(spark, sf).collect()
     assert(rows.toSeq === again.toSeq)
     // proportions near the 80/10/10 design (small corpus ⇒ loose bounds)
     val trainPct = bySplit.getOrElse("train", 0L).toDouble / total
@@ -58,7 +58,7 @@ class Round12Spec extends SparkSpec {
   // ---- t_mix_weights --------------------------------------------------
 
   test("t_mix_weights: weights normalize; α<1 upsamples the tail") {
-    val rows = Round12Queries.defs("t_mix_weights")(spark, sf).collect()
+    val rows = SparkEntry.queries("t_mix_weights")(spark, sf).collect()
     assert(rows.nonEmpty)
     val wSum = rows.map(_.getAs[Double]("weight")).sum
     assert(math.abs(wSum - 1.0) < 0.01, s"weights sum to $wSum")
@@ -81,7 +81,7 @@ class Round12Spec extends SparkSpec {
   // ---- t_chunk_windows ------------------------------------------------
 
   test("t_chunk_windows: chunks tile every document exactly") {
-    val rows = Round12Queries.defs("t_chunk_windows")(spark, sf).collect()
+    val rows = SparkEntry.queries("t_chunk_windows")(spark, sf).collect()
     val w = Round12Queries.ChunkWindow
     val st = Round12Queries.ChunkStride
     val nTok = Tables.documents(spark, sf)
@@ -109,7 +109,7 @@ class Round12Spec extends SparkSpec {
   // ---- t_oov_rate -----------------------------------------------------
 
   test("t_oov_rate: rates consistent and bounded; rounding is the house floorRound") {
-    val rows = Round12Queries.defs("t_oov_rate")(spark, sf).collect()
+    val rows = SparkEntry.queries("t_oov_rate")(spark, sf).collect()
     assert(rows.length === Tables.documents(spark, sf).count())
     rows.foreach { r =>
       val n = r.getAs[Int]("n_tokens")
@@ -149,7 +149,7 @@ class Round12Spec extends SparkSpec {
   // ---- q_k_anonymity --------------------------------------------------
 
   test("q_k_anonymity: census matches a direct group-size recompute") {
-    val r = Round12Queries.defs("q_k_anonymity")(spark, sf).head()
+    val r = SparkEntry.queries("q_k_anonymity")(spark, sf).head()
     val sizes = Tables.events(spark, sf)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n")).collect().map(_.getAs[Long]("n"))
@@ -166,7 +166,7 @@ class Round12Spec extends SparkSpec {
   // ---- v_maxsim_probe -------------------------------------------------
 
   test("v_maxsim_probe: top-10 scores match a direct Scala maxsim recompute") {
-    val out = Round12Queries.defs("v_maxsim_probe")(spark, sf).collect()
+    val out = SparkEntry.queries("v_maxsim_probe")(spark, sf).collect()
     assert(out.length === 10)
     // descending, vec_id tie-break
     out.sliding(2).foreach { case Array(a, b) =>
@@ -194,7 +194,7 @@ class Round12Spec extends SparkSpec {
   // ---- q_psi_drift ----------------------------------------------------
 
   test("q_psi_drift: PSI non-negative; stationary halves read as no-drift") {
-    val psi = Round12Queries.defs("q_psi_drift")(spark, sf).head().getAs[Double]("psi")
+    val psi = SparkEntry.queries("q_psi_drift")(spark, sf).head().getAs[Double]("psi")
     assert(psi >= 0.0, s"PSI is a KL-symmetrization, always >= 0: $psi")
     // both halves draw from the same generator: well under the 0.25
     // industry alarm threshold
@@ -222,7 +222,7 @@ class Round12Spec extends SparkSpec {
   // ---- q_ab_ztest -----------------------------------------------------
 
   test("q_ab_ztest: rates bounded, z matches a direct recompute, parity split sane") {
-    val r = Round12Queries.defs("q_ab_ztest")(spark, sf).head()
+    val r = SparkEntry.queries("q_ab_ztest")(spark, sf).head()
     val (na, ca, nb, cb) = (r.getAs[Long]("n_a"), r.getAs[Long]("c_a"),
       r.getAs[Long]("n_b"), r.getAs[Long]("c_b"))
     assert(na > 0 && nb > 0 && ca <= na && cb <= nb)
@@ -241,7 +241,7 @@ class Round12Spec extends SparkSpec {
   // ---- t_curriculum_bins ----------------------------------------------
 
   test("t_curriculum_bins: four quartile stages partition the corpus; quality is monotone") {
-    val rows = Round12Queries.defs("t_curriculum_bins")(spark, sf).collect()
+    val rows = SparkEntry.queries("t_curriculum_bins")(spark, sf).collect()
     assert(rows.map(_.getAs[Int]("stage")).toSeq.sorted === rows.map(_.getAs[Int]("stage")).toSeq)
     assert(rows.map(_.getAs[Int]("stage")).forall(s => s >= 1 && s <= 4))
     assert(rows.map(_.getAs[Long]("n_docs")).sum ===
@@ -256,7 +256,7 @@ class Round12Spec extends SparkSpec {
   // ---- v_matryoshka_probe ---------------------------------------------
 
   test("v_matryoshka_probe: overlaps bounded; full ranking matches a direct top-10") {
-    val r = Round12Queries.defs("v_matryoshka_probe")(spark, sf).head()
+    val r = SparkEntry.queries("v_matryoshka_probe")(spark, sf).head()
     val o32 = r.getAs[Long]("n_overlap_32")
     val o16 = r.getAs[Long]("n_overlap_16")
     assert(o32 >= 0 && o32 <= 10 && o16 >= 0 && o16 <= 10)

@@ -1,6 +1,5 @@
 package graft
 
-import graft.operators.Round3Queries
 import org.apache.spark.sql.functions._
 
 /** Semantics pins for the round-3 queries (Round3Queries). */
@@ -10,7 +9,7 @@ class Round3Spec extends SparkSpec {
 
   test("bitmap distinct == exact countDistinct per key") {
     import spark.implicits._
-    val viaBitmap = Round3Queries.defs("q_bitmap_distinct")(spark, sf)
+    val viaBitmap = SparkEntry.queries("q_bitmap_distinct")(spark, sf)
       .as[(String, Long)].collect().toMap
     val exact = Tables.events(spark, sf)
       .groupBy($"event_type").agg(countDistinct($"user_id").as("n"))
@@ -20,12 +19,12 @@ class Round3Spec extends SparkSpec {
 
   test("LOCF skips nulls and NOCB looks forward") {
     import spark.implicits._
-    val out = Round3Queries.defs("q_ignore_nulls")(spark, sf)
+    val out = SparkEntry.queries("q_ignore_nulls")(spark, sf)
       .filter($"v".isNull).limit(1000).collect()
     assert(out.nonEmpty)
     // every nulled value row must be filled from a neighbor when one exists:
     // locf/nocb are only null at the partition edge (no prior/next non-null)
-    val locfNulls = Round3Queries.defs("q_ignore_nulls")(spark, sf)
+    val locfNulls = SparkEntry.queries("q_ignore_nulls")(spark, sf)
       .groupBy($"user_id")
       .agg(min(when($"v".isNotNull, $"event_id")).as("first_nonnull"),
         max(when($"locf".isNull, $"event_id")).as("last_locf_null"))
@@ -36,7 +35,7 @@ class Round3Spec extends SparkSpec {
 
   test("posexplode_outer keeps one null row per empty array") {
     import spark.implicits._
-    val df = Round3Queries.defs("q_explode_outer")(spark, sf)
+    val df = SparkEntry.queries("q_explode_outer")(spark, sf)
     val emptyKeys = Tables.customer(spark, sf)
       .select($"c_custkey", expr("size(filter(sequence(1L, CAST(c_nationkey % 5 + 1 AS LONG)), x -> x % 4 = 0))").as("n"))
       .filter($"n" === 0).count()
@@ -47,7 +46,7 @@ class Round3Spec extends SparkSpec {
 
   test("ngram jaccard is within [0,1] and 1 for identical texts") {
     import spark.implicits._
-    val out = Round3Queries.defs("d_ngram_jaccard")(spark, sf)
+    val out = SparkEntry.queries("d_ngram_jaccard")(spark, sf)
     assert(out.filter($"jacc" < 0.0 || $"jacc" > 1.0).count() == 0)
     // identical strings => identical gram sets => jaccard 1
     val g = expr("array_distinct(transform(sequence(1, greatest(length(t) - 2, 1)), i -> substring(t, i, 3)))")
@@ -59,7 +58,7 @@ class Round3Spec extends SparkSpec {
 
   test("resize plan preserves aspect ratio within integer truncation") {
     import spark.implicits._
-    val bad = Round3Queries.defs("m_resize_plan")(spark, sf)
+    val bad = SparkEntry.queries("m_resize_plan")(spark, sf)
       .filter(greatest($"out_w", $"out_h") =!= 224)
       .count()
     assert(bad == 0, "long side must land exactly on 224")

@@ -185,8 +185,7 @@ class SimilaritySpec extends SparkSpec {
     // oracle column because strictness is a property of Lloyd on this
     // corpus (plain-mean M-steps maximize the L2 objective, not cosine),
     // not an analytic guarantee.
-    val r = graft.operators.SimilarityQueries
-      .defs("v_ivf_train_gain")(spark, "/root/testdata/sf0.01").head()
+    val r = SparkEntry.queries("v_ivf_train_gain")(spark, "/root/testdata/sf0.01").head()
     val seed = r.getAs[Double]("avg_cohesion_seed")
     val t1 = r.getAs[Double]("avg_cohesion_trained")
     val t3 = r.getAs[Double]("avg_cohesion_trained3")

@@ -120,36 +120,6 @@ class StatefulSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("statsEveryNTws (transformWithState/state-v2) matches the fMGWS semantics") {
-    // state-v2 requires RocksDB; scope the provider to this query
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = MemoryStream[(String, Boolean)](spark)
-      val out = StreamingAggs.statsEveryNTws(stream.toDS(), every = 3)
-      val q = out.writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName("stats_tws_out").start()
-      try {
-        stream.addData(("rk-a", true), ("rk-a", false), ("rk-a", true),
-          ("rk-a", true), ("rk-b", true), ("rk-b", true))
-        q.processAllAvailable()
-        stream.addData(("rk-a", true), ("rk-a", true), ("rk-b", false))
-        q.processAllAvailable()
-        val rows = spark.table("stats_tws_out").as[StreamStats].collect()
-          .sortBy(s => (s.routingKey, s.received))
-        assert(rows.toSeq === Seq(
-          StreamStats("rk-a", 3, 2),
-          StreamStats("rk-a", 6, 5),
-          StreamStats("rk-b", 3, 2)))
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   test("sessionTimeouts: event-time timer closes a quiet stream once the watermark passes") {
     import StreamingAggs.SessionClosed
     val key = "spark.sql.streaming.stateStore.providerClass"

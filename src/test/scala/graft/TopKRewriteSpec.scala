@@ -16,10 +16,14 @@ class TopKRewriteSpec extends SparkSpec {
   private def windowTopK(k: Int): DataFrame = {
     val w = Window.partitionBy(col("c_mktsegment"))
       .orderBy(col("c_acctbal").desc, col("c_custkey"))
-    Tables.customer(spark, d)
+    val df = Tables.customer(spark, d)
       .select(col("c_mktsegment"), col("c_custkey"), col("c_acctbal"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
+    // the session must not rewrite it already, or every reference below
+    // is the heap operator compared with itself
+    assert(df.queryExecution.optimizedPlan.collect { case t: TopKPerKey => t }.isEmpty)
+    df
   }
 
   private def rewritten(df: DataFrame): DataFrame = {

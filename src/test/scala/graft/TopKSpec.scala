@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.TopK
+import graft.plans.{TopK, TopKPerKey}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,10 +19,13 @@ class TopKSpec extends SparkSpec {
       .orderBy("c_mktsegment", "rk")
       .collect().map(_.toString).toSeq
     val w = Window.partitionBy($"c_mktsegment").orderBy($"c_acctbal".desc, $"c_custkey")
-    val windowed = c.withColumn("rk", row_number().over(w)).filter($"rk" <= 3)
+    val windowedDf = c.withColumn("rk", row_number().over(w)).filter($"rk" <= 3)
       .select($"c_mktsegment", $"rk", $"c_custkey", $"c_acctbal")
       .orderBy("c_mktsegment", "rk")
-      .collect().map(_.toString).toSeq
+    // the reference must stay the window form, or this compares the heap
+    // operator with itself
+    assert(windowedDf.queryExecution.optimizedPlan.collect { case t: TopKPerKey => t }.isEmpty)
+    val windowed = windowedDf.collect().map(_.toString).toSeq
     assert(native === windowed)
     assert(native.size === 15) // 5 segments x 3
   }
